@@ -464,7 +464,7 @@ object BloomTable {
     Files.readString(indexLatest(tablePath)).trim.toLong
 
   private def readIndex(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read.parquet(s"$tablePath/_index/v=${currentIndexVersion(tablePath)}")
+    UnitSchema.read(spark, s"$tablePath/_index/v=${currentIndexVersion(tablePath)}")
 
   /** Next index version that cannot collide with debris: a writer that
     * died after the `v=` dir write but before the pointer swap leaves
@@ -486,8 +486,7 @@ object BloomTable {
 
   private def writeIndex(tablePath: String, rows: DataFrame, v: Long): Unit = {
     Files.createDirectories(Paths.get(tablePath, "_index"))
-    rows.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$tablePath/_index/v=$v")
+    UnitSchema.write(rows.coalesce(1), s"$tablePath/_index/v=$v")
     val tmp = Paths.get(tablePath, "_index", s"_latest.tmp${System.nanoTime()}")
     Files.writeString(tmp, v.toString,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
@@ -503,6 +502,12 @@ object BloomTable {
       .map(n => s"c=$commit/$n").toSeq.sorted
     finally s.close()
   }
+
+  /** Files of ONE unit — a `c=N` commit dir, or the bootstrap source
+    * dir — read with the unit's recorded schema.
+    */
+  private def readUnitFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    UnitSchema.read(spark, Paths.get(files.head).getParent.toString, files)
 
   private def absFiles(tablePath: String, rel: Seq[String]): Seq[String] = {
     val base = Paths.get(tablePath).toAbsolutePath.normalize
@@ -556,8 +561,8 @@ object BloomTable {
     */
   private def writeCommit(df: DataFrame, tablePath: String, commit: Long,
       p: Props, files: Int): Seq[String] = {
-    df.repartitionByRange(math.max(1, files), col(p.keys.head))
-      .write.mode("errorifexists").parquet(s"$tablePath/c=$commit")
+    UnitSchema.write(df.repartitionByRange(math.max(1, files), col(p.keys.head)),
+      s"$tablePath/c=$commit")
     listCommitFiles(tablePath, commit)
   }
 
@@ -626,7 +631,7 @@ object BloomTable {
         CdcLog.diff(content.limit(0), content, keys)
       })
     writeIndex(tablePath,
-      indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p), 0L)
+      indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p), 0L)
   }
 
   /** Hudi's METADATA_ONLY bootstrap on the bloom layout: onboard an
@@ -715,7 +720,7 @@ object BloomTable {
       rel: Seq[String]): DataFrame = {
     dataScans.increment()
     rel.groupBy(f => f.takeWhile(_ != '/'))
-      .values.map(fs => spark.read.parquet(absFiles(tablePath, fs.toSeq): _*))
+      .values.map(fs => readUnitFiles(spark, absFiles(tablePath, fs.toSeq)))
       .reduce(SchemaShim.unionByName)
   }
 
@@ -736,13 +741,29 @@ object BloomTable {
     * before they could cause a missed match.
     */
   private def reconcileIndex(spark: SparkSession, tablePath: String,
+      p: Props): DataFrame = reconcile(spark, tablePath, p)._1
+
+  /** [[reconcileIndex]] for a statement that consumes the rows more
+    * than once: materialized only when the reconcile scanned missing
+    * files (that scan must not run twice); otherwise the rows are a
+    * filter over the immutable `_index/v=M`, which is tiny and cheaper
+    * to re-read than to checkpoint.
+    */
+  private def reconcileIndexOnce(spark: SparkSession, tablePath: String,
       p: Props): DataFrame = {
+    val (idx, healed) = reconcile(spark, tablePath, p)
+    if (healed) idx.localCheckpoint() else idx
+  }
+
+  /** The reconciled index rows and whether any data file was scanned. */
+  private def reconcile(spark: SparkSession, tablePath: String,
+      p: Props): (DataFrame, Boolean) = {
     val live = absFiles(tablePath, manifest(tablePath))
     val idx = filesIn(spark, readIndex(spark, tablePath), live, keep = true)
     val indexed = idx.select("file").collect().map(_.getString(0)).toSet
     val missing = live.filterNot(indexed)
-    if (missing.isEmpty) idx
-    else idx.unionByName(
+    if (missing.isEmpty) (idx, false)
+    else (idx.unionByName(
       // the missing files may span commits whose schemas differ
       // (evolution, type widening); index rows have a fixed shape, so
       // compute per commit dir and union the RESULTS (indexRows needs
@@ -750,9 +771,9 @@ object BloomTable {
       missing.groupBy(f => f.substring(0, f.lastIndexOf('/'))).values
         .map { fs =>
           dataScans.increment()
-          indexRows(spark.read.parquet(fs.toSeq.sorted: _*), p)
+          indexRows(readUnitFiles(spark, fs.toSeq.sorted), p)
         }
-        .reduce(_.unionByName(_)))
+        .reduce(_.unionByName(_))), true)
   }
 
   /** Relative paths of live files that MAY contain at least one key of
@@ -812,7 +833,7 @@ object BloomTable {
       writeManifest(tablePath, written, commit, "overwrite",
         CdcLog.Action.Destructive)
       writeIndex(tablePath,
-        indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p),
+        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p),
         nextIndexVersion(tablePath))
       // bound secondary indexes are rebuilt from the replacement —
       // proportionate, the verb itself replaced the whole table
@@ -839,7 +860,7 @@ object BloomTable {
     PreCommit.validate(batch, validators)
     // reconcile once, reuse for tagging AND as the base of the next
     // index version — a healed gap is persisted, not re-healed forever
-    val idx = reconcileIndex(spark, tablePath, p).localCheckpoint()
+    val idx = reconcileIndexOnce(spark, tablePath, p)
     val touched = candidateFiles(tablePath, batch, idx, p)
     val commit = nextCommit(tablePath)
     val existing =
@@ -871,7 +892,7 @@ object BloomTable {
       keep = false)
     writeIndex(tablePath,
       keptIdx.unionByName(
-        indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p)),
+        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p)),
       nextIndexVersion(tablePath))
     maintainBound(spark, tablePath, bound,
       Some(existing.join(broadcast(batchKeys), p.keys, "leftsemi")),
@@ -923,8 +944,9 @@ object BloomTable {
     val merged = HudiLike.upsert(existing, batch, p.keys, p.precombine,
       p.tieBreak)
     val staged = Paths.get(tablePath, s"_staged-occ${System.nanoTime()}")
-    merged.repartitionByRange(math.max(1, touched.size), col(p.keys.head))
-      .write.mode("errorifexists").parquet(staged.toString)
+    UnitSchema.write(
+      merged.repartitionByRange(math.max(1, touched.size), col(p.keys.head)),
+      staged.toString)
     // The staged files are IMMUTABLE from here: everything derivable
     // from them — the CDC row image and the per-file bloom/zone index
     // rows — is computed and MATERIALIZED before the lock, so the
@@ -932,7 +954,7 @@ object BloomTable {
     // must not scale with commit size; that is what OCC exists to
     // avoid, and Hudi's in-lock validation is likewise metadata-only.
     dataScans.increment()
-    val stagedContent = spark.read.parquet(staged.toString)
+    val stagedContent = UnitSchema.read(spark, staged.toString)
     val cdcRows =
       if (CdcLog.enabled(tablePath))
         Some(CdcLog.diff(existing, stagedContent, p.keys).localCheckpoint())
@@ -1035,7 +1057,7 @@ object BloomTable {
     val (keyRel, keyN) = Fuse.checkpointCounted(
       keysToDelete.select(p.keys.map(col): _*).distinct())
     if (keyN == 0L) return Seq.empty
-    val idx = reconcileIndex(spark, tablePath, p).localCheckpoint()
+    val idx = reconcileIndexOnce(spark, tablePath, p)
     val touched = candidateFiles(tablePath, keyRel, idx, p)
     if (touched.isEmpty) return Seq.empty
     val existing = readFiles(spark, tablePath, touched)
@@ -1065,7 +1087,7 @@ object BloomTable {
     val nextIdx =
       if (written.isEmpty) keptIdx
       else keptIdx.unionByName(
-        indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p))
+        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
     writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
     maintainBound(spark, tablePath, bound,
       Some(existing.join(broadcast(keyRel), p.keys, "leftsemi")),
@@ -1094,7 +1116,7 @@ object BloomTable {
       keyRows.select(p.keys.map(col): _*).distinct())
     if (keyN == 0L) Seq.empty
     else {
-      val idx = reconcileIndex(spark, tablePath, p).localCheckpoint()
+      val idx = reconcileIndexOnce(spark, tablePath, p)
       val touched = candidateFiles(tablePath, keyRel, idx, p)
       val existing =
         if (touched.isEmpty) read(spark, tablePath).limit(0)
@@ -1119,7 +1141,7 @@ object BloomTable {
       val nextIdx =
         if (written.isEmpty) keptIdx
         else keptIdx.unionByName(
-          indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p))
+          indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
       writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
       maintainBound(spark, tablePath, bound, Some(existing), next, p, commit)
       touched
@@ -1146,9 +1168,9 @@ object BloomTable {
     if (live.isEmpty) return Seq.empty
     // reconcile against the PRE-rewrite manifest, reused for the index
     // update below (same shape as the delete path)
-    val idx = reconcileIndex(spark, tablePath, p).localCheckpoint()
+    val idx = reconcileIndexOnce(spark, tablePath, p)
     val touched = live.groupBy(_.takeWhile(_ != '/')).values.map { fs =>
-      spark.read.parquet(absFiles(tablePath, fs.toSeq): _*)
+      readUnitFiles(spark, absFiles(tablePath, fs.toSeq))
         .withColumn("__fp",
           regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
     }.reduce(SchemaShim.unionByName)
@@ -1177,7 +1199,7 @@ object BloomTable {
     val nextIdx =
       if (written.isEmpty) keptIdx
       else keptIdx.unionByName(
-        indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p))
+        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
     writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
     maintainBound(spark, tablePath, bound,
       Some(readFiles(spark, tablePath, touched)), next, p, commit)
@@ -1299,7 +1321,7 @@ object BloomTable {
     writeManifest(tablePath, written, commit, "cluster",
       CdcLog.Action.Preserving)
     writeIndex(tablePath,
-      indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p),
+      indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p),
       nextIndexVersion(tablePath))
     // content-preserving commit: mappings unchanged, head advances
     boundSecondaryIndexes(tablePath).foreach { case (_, idxPath) =>
@@ -1334,14 +1356,13 @@ object BloomTable {
       val files = math.max(p.numFiles.toLong,
         (rows + targetFileRows - 1) / targetFileRows).toInt
       val commit = nextCommit(tablePath)
-      data.repartitionByRange(files, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("errorifexists").parquet(s"$tablePath/c=$commit")
+      UnitSchema.write(data.repartitionByRange(files, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*), s"$tablePath/c=$commit")
       val written = listCommitFiles(tablePath, commit)
       writeManifest(tablePath, written, commit, "cluster",
         CdcLog.Action.Preserving)
       writeIndex(tablePath,
-        indexRows(spark.read.parquet(absFiles(tablePath, written): _*), p),
+        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p),
         nextIndexVersion(tablePath))
       boundSecondaryIndexes(tablePath).foreach { case (_, idxPath) =>
         SecondaryIndex.markCovered(idxPath, commit)

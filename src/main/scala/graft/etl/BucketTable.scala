@@ -538,9 +538,15 @@ object BucketTable {
   private def readGenBuckets(spark: SparkSession, tablePath: String,
       gen: Long, buckets: Seq[Int], schemaOf: DataFrame): DataFrame =
     if (buckets.isEmpty) schemaOf.limit(0)
-    else spark.read.option("basePath", s"$tablePath/gen=$gen")
-      .parquet(buckets.sorted.map(b => s"$tablePath/gen=$gen/$BucketCol=$b"): _*)
-      .drop(BucketCol)
+    else genFrame(spark, tablePath, gen, buckets).drop(BucketCol)
+
+  /** Buckets of one generation, `__bucket` discovered from the dirs. */
+  private def genFrame(spark: SparkSession, tablePath: String, gen: Long,
+      buckets: Seq[Int]): DataFrame = {
+    val unit = s"$tablePath/gen=$gen"
+    UnitSchema.read(spark, unit,
+      buckets.sorted.map(b => s"$unit/$BucketCol=$b"), partitioned = true)
+  }
 
   /** Hudi-style incremental query on the CoW bucket layout: the
     * CURRENT content of every bucket some commit AFTER `sinceCommit`
@@ -680,8 +686,8 @@ object BucketTable {
     // produced by one task → one file per bucket dir. Without it each
     // of the writer's input tasks opens a file in every bucket it sees
     // (tasks × buckets small files — the classic partitionBy blowup)
-    df.repartition(col(BucketCol))
-      .write.mode("errorifexists").partitionBy(BucketCol).parquet(dir.toString)
+    UnitSchema.write(df.repartition(col(BucketCol)), dir.toString,
+      partitionBy = Seq(BucketCol))
     listWrittenBuckets(dir)
   }
 
@@ -764,9 +770,7 @@ object BucketTable {
       buckets: Set[Int], m0: Map[Int, Long]): DataFrame = {
     val m = m0.view.filterKeys(buckets).toMap
     m.groupBy(_._2).map { case (gen, entries) =>
-      spark.read.option("basePath", s"$tablePath/gen=$gen")
-        .parquet(entries.keys.toSeq.sorted
-          .map(b => s"$tablePath/gen=$gen/$BucketCol=$b"): _*)
+      genFrame(spark, tablePath, gen, entries.keys.toSeq)
     }.reduceOption(SchemaShim.unionByName)
       .getOrElse(read(spark, tablePath).limit(0).withColumn(BucketCol, lit(0)))
   }
@@ -1425,9 +1429,9 @@ object BucketTable {
       val layout = (BucketCol +: sortCols).map(col)
       // bucket leads the range layout: each task holds one bucket's
       // contiguous sort range → range-disjoint files per bucket dir
-      data.repartitionByRange(numParts, layout: _*)
-        .sortWithinPartitions(layout: _*)
-        .write.mode("errorifexists").partitionBy(BucketCol).parquet(dir.toString)
+      UnitSchema.write(data.repartitionByRange(numParts, layout: _*)
+        .sortWithinPartitions(layout: _*), dir.toString,
+        partitionBy = Seq(BucketCol))
       val written = listWrittenBuckets(dir)
       val c = writeManifestLocked(tablePath, written.map(_ -> gen).toMap, p,
         CdcLog.Action.Preserving)
@@ -1473,10 +1477,10 @@ object BucketTable {
       val gen = nextGen(tablePath)
       rollbackOrphan(tablePath, gen)
       val dir = Paths.get(tablePath, s"gen=$gen")
-      readBuckets(spark, tablePath, m.keySet).drop(BucketCol)
+      UnitSchema.write(readBuckets(spark, tablePath, m.keySet).drop(BucketCol)
         .withColumn(BucketCol,
-          pmod(xxhash64(np.bucketBy.map(col): _*), lit(np.numBuckets)).cast("int"))
-        .write.mode("errorifexists").partitionBy(BucketCol).parquet(dir.toString)
+          pmod(xxhash64(np.bucketBy.map(col): _*), lit(np.numBuckets)).cast("int")),
+        dir.toString, partitionBy = Seq(BucketCol))
       val written = listWrittenBuckets(dir)
       // ONE atomic commit carries both the new routing (manifest props
       // header) and the new bucket map — a crash can never durably

@@ -97,7 +97,7 @@ object Catalog {
     * session — each session tracks its own views).
     */
   def registerView(spark: SparkSession, name: String, tablePath: String): Unit = {
-    spark.read.parquet(tablePath).createOrReplaceTempView(name)
+    UnitSchema.read(spark, tablePath).createOrReplaceTempView(name)
     viewRegistry.put(key(spark, name), ViewEntry(
       new java.lang.ref.WeakReference(spark), name, canon(tablePath), timeline = false))
   }
@@ -132,7 +132,7 @@ object Catalog {
           case null => dead.add(k)
           case owner =>
             if (e.timeline) Timeline.read(owner, e.path).createOrReplaceTempView(e.name)
-            else owner.read.parquet(e.path).createOrReplaceTempView(e.name)
+            else UnitSchema.read(owner, e.path).createOrReplaceTempView(e.name)
             try owner.catalog.refreshByPath(p)
             catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -166,9 +166,27 @@ object Catalog {
         .map(_.trim).filter(_.nonEmpty).toSeq)
   }
 
-  private def tblProps(spark: SparkSession, table: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+  /** The table's properties exactly as `SHOW TBLPROPERTIES` returns
+    * them (a temp view has none; values redacted and view-internal keys
+    * hidden the same way), read straight from the session catalog: a
+    * lookup, where the statement costs two SQL executions. No cache —
+    * the catalog stays the single source of truth.
+    */
+  private[etl] def tblProps(spark: SparkSession, table: String): Map[String, String] = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.CatalogTable
+    val ident = spark.sessionState.sqlParser.parseMultipartIdentifier(table) match {
+      case Seq(t) => TableIdentifier(t)
+      case Seq(db, t) => TableIdentifier(t, Some(db))
+      case Seq(cat, db, t) => TableIdentifier(t, Some(db), Some(cat))
+      case _ => throw new IllegalArgumentException(s"not a table name: $table")
+    }
+    val catalog = spark.sessionState.catalog
+    if (catalog.isTempView(ident)) Map.empty
+    else spark.sessionState.conf.redactOptions(
+      catalog.getTableMetadata(ident).properties)
+      .filterNot(_._1.startsWith(CatalogTable.VIEW_PREFIX))
+  }
 
   // ---- layout-backed tables -------------------------------------------
   // Hudi registers its tables in the metastore so SQL DML routes to the
@@ -428,7 +446,7 @@ object Catalog {
   /** All three parts of the schema-on-read mapping in ONE catalog
     * fetch: (rename map, dropped set, defaults map). DML statements
     * fetch this once and thread it through their read/write
-    * reconciliations instead of re-running SHOW TBLPROPERTIES per call.
+    * reconciliations instead of re-reading the catalog per call.
     */
   private[etl] def schemaMapping(spark: SparkSession,
       table: String): (Map[String, String], Set[String], Map[String, String]) = {

@@ -170,7 +170,7 @@ object HudiLike {
   def commit(df: DataFrame, tablePath: String): Unit = {
     val target = Paths.get(tablePath)
     val snap = Paths.get(tablePath + ".snap-" + System.nanoTime())
-    df.write.mode("overwrite").parquet(snap.toString)
+    UnitSchema.write(df, snap.toString, mode = "overwrite")
     val prev =
       if (Files.isSymbolicLink(target)) Some(Files.readSymbolicLink(target))
       else None
@@ -208,7 +208,7 @@ object HudiLike {
       tieBreak: Seq[String] = Nil): Unit = {
     val merged =
       if (Files.exists(Paths.get(tablePath))) {
-        val existing = spark.read.parquet(tablePath)
+        val existing = UnitSchema.read(spark, tablePath)
         // localCheckpoint decouples the merged plan from the files about
         // to be swapped out; without it the lazy write would re-read the
         // directory being replaced.

@@ -214,8 +214,8 @@ object MorTable {
     Files.writeString(propsPath(tablePath),
       s"keys=${keys.mkString(",")}\nprecombine=$precombine\ntieBreak=${tieBreak.mkString(",")}\n",
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    HudiLike.precombineLatest(df, keys, precombine, tieBreak)
-      .write.mode("overwrite").parquet(s"$tablePath/base=0")
+    UnitSchema.write(HudiLike.precombineLatest(df, keys, precombine, tieBreak),
+      s"$tablePath/base=0", mode = "overwrite")
     logBase(tablePath, 0L, 0L, "create")
     logSeqTime(tablePath, 0L)
     writePointer(tablePath, 0L, 0L, 0L)
@@ -283,7 +283,7 @@ object MorTable {
   private def baseFrame(spark: SparkSession, tablePath: String, base: Long): DataFrame =
     if (base == 0L && Files.exists(bootstrapPath(tablePath)))
       spark.read.parquet(Files.readString(bootstrapPath(tablePath)).trim)
-    else spark.read.parquet(s"$tablePath/base=$base")
+    else UnitSchema.read(spark, s"$tablePath/base=$base")
 
   private def deleteRecursively(p: Path): Unit = FsUtil.deleteRecursively(p)
 
@@ -334,9 +334,8 @@ object MorTable {
             CdcLog.diff(ba._1, ba._2, props(tablePath).keys))
           (f, Some(ba))
         }
-      MaintProf.timed("mor.logWrite")(flagged
-        .withColumn(SeqCol, lit(seq))
-        .write.mode("errorifexists").parquet(logDir.toString))
+      MaintProf.timed("mor.logWrite")(UnitSchema.write(
+        flagged.withColumn(SeqCol, lit(seq)), logDir.toString))
       logSeqTime(tablePath, seq)
       writePointer(tablePath, base, seq, floor)
       CdcLog.publish(tablePath, seq)
@@ -517,7 +516,7 @@ object MorTable {
       .withColumn(SeqCol, lit(0L)).withColumn(DelCol, lit(false))
     val all = ((floor + 1) to head).foldLeft(baseDf) { (acc, s) =>
       SchemaShim.unionByName(acc,
-        spark.read.parquet(s"$tablePath/log=$base.$s"))
+        UnitSchema.read(spark, s"$tablePath/log=$base.$s"))
     }
     val cond = p.keys.map(k => all(k) <=> keyset(k)).reduce(_ && _)
     val restricted = all.join(keyset, cond, "left_semi")
@@ -538,7 +537,7 @@ object MorTable {
     val merged = ((floor + 1) to to).foldLeft(baseDf) { (acc, s) =>
       // logs may be schema-sparse (tombstones carry NULL payload cols)
       SchemaShim.unionByName(acc,
-        spark.read.parquet(s"$tablePath/log=$base.$s"))
+        UnitSchema.read(spark, s"$tablePath/log=$base.$s"))
     }
     // _seq as the leading tie-break: on equal precombine the later
     // commit wins, so deltas shadow the base rows they replace
@@ -622,7 +621,7 @@ object MorTable {
         s"$floor at $tablePath — the unseen window was folded into the " +
         "base; re-sync from a snapshot read and checkpoint changeHead")
     val logs = ((sinceSeq + 1) to head).map(s =>
-      spark.read.parquet(s"$tablePath/log=$base.$s"))
+      UnitSchema.read(spark, s"$tablePath/log=$base.$s"))
     logs.reduceLeftOption(SchemaShim.unionByName)
       .getOrElse(readOptimized(spark, tablePath).limit(0)
         .withColumn(SeqCol, lit(0L)).withColumn(DelCol, lit(false)))
@@ -649,8 +648,8 @@ object MorTable {
       val (base, head, _) = fullState(tablePath).getOrElse(
         throw new IllegalStateException(s"no MOR table at $tablePath"))
       val next = base + 1
-      readSnapshot(spark, tablePath).write.mode("overwrite")
-        .parquet(s"$tablePath/base=$next")
+      UnitSchema.write(readSnapshot(spark, tablePath), s"$tablePath/base=$next",
+        mode = "overwrite")
       logBase(tablePath, next, head, "compact")
       writePointer(tablePath, next, head, head)
       next
@@ -678,9 +677,9 @@ object MorTable {
       val files = math.max(1L,
         (snap.count() + targetFileRows - 1) / targetFileRows).toInt
       val next = base + 1
-      snap.repartitionByRange(files, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("overwrite").parquet(s"$tablePath/base=$next")
+      UnitSchema.write(snap.repartitionByRange(files, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*), s"$tablePath/base=$next",
+        mode = "overwrite")
       logBase(tablePath, next, head, "cluster")
       writePointer(tablePath, next, head, head)
       next
@@ -707,7 +706,7 @@ object MorTable {
         s"INSERT OVERWRITE with an empty batch at $tablePath — " +
           "DELETE the rows instead")
       val next = base + 1
-      batch.write.mode("overwrite").parquet(s"$tablePath/base=$next")
+      UnitSchema.write(batch, s"$tablePath/base=$next", mode = "overwrite")
       // the overwrite CONSUMES a change seq and ratchets the floor past
       // every pre-overwrite cursor: a full restate invalidates the
       // row-level feed (no per-commit diff exists for it), so even a

@@ -435,8 +435,7 @@ object PartitionedTable {
       p: Props): Seq[String] = {
     rollbackOrphan(tablePath, gen)
     val dir = Paths.get(tablePath, s"gen=$gen")
-    df.write.mode("errorifexists").partitionBy(p.dirCols: _*)
-      .parquet(dir.toString)
+    UnitSchema.write(df, dir.toString, partitionBy = p.dirCols)
     leafDirs(dir, p)
   }
 
@@ -541,9 +540,9 @@ object PartitionedTable {
       dirs: Set[String], m0: Map[String, Long], p: Props): DataFrame = {
     val m = m0.view.filterKeys(dirs).toMap
     m.groupBy(_._2).map { case (gen, entries) =>
-      spark.read.option("basePath", s"$tablePath/gen=$gen")
-        .parquet(entries.keys.toSeq.sorted
-          .map(d => s"$tablePath/gen=$gen/$d"): _*)
+      val unit = s"$tablePath/gen=$gen"
+      UnitSchema.read(spark, unit, entries.keys.toSeq.sorted.map(d => s"$unit/$d"),
+        partitioned = true)
     }.reduceOption(SchemaShim.unionByName)
       .map(_.drop(p.partitionCols.map(Shadow + _) :+ Group: _*))
       .getOrElse(read(spark, tablePath).limit(0))
@@ -1235,9 +1234,8 @@ object PartitionedTable {
       // publishes images of a commit that didn't happen)
       if (cdcOn) stageCdcDelta(spark, tablePath, seq, tagged, p, before.get)
       val pre = if (bound.nonEmpty) before else None
-      tagged.repartition(p.dirCols.map(col): _*)
-        .write.mode("errorifexists").partitionBy(p.dirCols: _*)
-        .parquet(dir.toString)
+      UnitSchema.write(tagged.repartition(p.dirCols.map(col): _*),
+        dir.toString, partitionBy = p.dirCols)
       val written = leafDirs(dir, p)
       val m0 = manifest(tablePath)
       writeDeltas(tablePath, existing ++ written.map(_ -> seq))
@@ -1288,9 +1286,8 @@ object PartitionedTable {
       // publishes images of a commit that didn't happen)
       if (cdcOn) stageCdcDelta(spark, tablePath, seq, tagged, p, before.get)
       val pre = if (bound.nonEmpty) before else None
-      tagged.repartition(p.dirCols.map(col): _*)
-        .write.mode("errorifexists").partitionBy(p.dirCols: _*)
-        .parquet(dir.toString)
+      UnitSchema.write(tagged.repartition(p.dirCols.map(col): _*),
+        dir.toString, partitionBy = p.dirCols)
       val written = leafDirs(dir, p)
       val m0 = manifest(tablePath)
       writeDeltas(tablePath, existing ++ written.map(_ -> seq))
@@ -1323,8 +1320,9 @@ object PartitionedTable {
   private def deltaFrame(spark: SparkSession, tablePath: String,
       d: Seq[(String, Long)], p: Props): DataFrame =
     d.groupBy(_._2).map { case (seq, entries) =>
-      val df = spark.read.option("basePath", s"$tablePath/dgen=$seq")
-        .parquet(entries.map(e => s"$tablePath/dgen=$seq/${e._1}").toSeq.sorted: _*)
+      val unit = s"$tablePath/dgen=$seq"
+      val df = UnitSchema.read(spark, unit,
+        entries.map(e => s"$unit/${e._1}").toSeq.sorted, partitioned = true)
         .drop(p.partitionCols.map(Shadow + _) :+ Group: _*)
         .withColumn(DSeq, lit(seq))
       // upsert commits predate/omit the tombstone flag — normalize so

@@ -15,9 +15,10 @@ import org.apache.spark.sql.catalyst.plans.logical.Call
   * touched), so a CALL composes with the rest of the SQL surface.
   *
   * Procedures (positional literal args):
-  *   - `show_commits('t')` — the timeline's full instant history
-  *     (version, action, n_rows, archived, ts_ms), archived batches
-  *     folded in
+  *   - `show_commits('t')` — the table's commit history, archived
+  *     entries folded in: a timeline's instants (version, action,
+  *     n_rows, archived, ts_ms); on bucket / bloom / partitioned / mor
+  *     the `_commits` log (version, action, ts_ms)
   *   - `clean_commits('t', retain)` — drop all but the newest
   *     `retain` snapshot versions; returns the versions removed
   *   - `archive_commits('t', keep)` — fold all but the newest `keep`
@@ -108,6 +109,30 @@ object SqlCall {
           other.fold("")(kp => s" (layout: ${kp._1})"))
     }
 
+  /** `show_commits` on the layouts that keep a `_commits` line log
+    * (bucket, bloom, partitioned, MOR), archived lines included: one
+    * (version, action, ts_ms) row per commit, oldest first. A line
+    * leads with its commit number — on MOR the change seq, whose wall
+    * clock is the second token; elsewhere a `ts=` token carries it
+    * (-1 on lines written before timestamps were), and bloom and
+    * partitioned lines name the commit's kind second.
+    */
+  private def commitLogHistory(kind: String,
+      path: String): Seq[(Long, String, Long)] =
+    CommitLogFile.fullLines(path).map { l =>
+      val tok = l.split(' ')
+      val no = tok(0).toLong
+      val ts = (if (kind == "mor") tok.lift(1)
+        else tok.find(_.startsWith("ts=")).map(_.drop(3)))
+        .filter(x => x.nonEmpty && x.forall(_.isDigit)).fold(-1L)(_.toLong)
+      val action = kind match {
+        case "mor" => if (no == 0L) "create" else "deltacommit"
+        case "bucket" => "commit"
+        case _ => tok.lift(1).getOrElse("commit")
+      }
+      (no, action, ts)
+    }.sortBy(_._1)
+
   private def toInt(x: Any, what: String): Int = x match {
     case i: Int => i
     case l: Long => l.toInt
@@ -120,7 +145,14 @@ object SqlCall {
     import spark.implicits._
     (name, argv) match {
       case ("show_commits", Seq(t: String)) =>
-        Timeline.history(spark, timelinePathOf(spark, t))
+        Catalog.layoutOf(spark, t) match {
+          case Some(("timeline", p)) => Timeline.history(spark, p)
+          case Some((kind @ ("bucket" | "bloom" | "partitioned" | "mor"), p)) =>
+            commitLogHistory(kind, p).toDF("version", "action", "ts_ms")
+          case other => throw new IllegalArgumentException(
+            s"$t: show_commits needs a layout-bound table" +
+              other.fold("")(kp => s" (layout: ${kp._1})"))
+        }
       case ("clean_commits", Seq(t: String, retain)) =>
         Timeline.clean(timelinePathOf(spark, t),
           toInt(retain, "retain")).toDF("version")

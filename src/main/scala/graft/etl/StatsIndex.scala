@@ -83,7 +83,7 @@ object StatsIndex {
     Files.readString(latestPath(statsPath)).trim.toLong
 
   private def statsDf(spark: SparkSession, statsPath: String): DataFrame =
-    spark.read.parquet(s"$statsPath/v=${currentVersion(statsPath)}")
+    UnitSchema.read(spark, s"$statsPath/v=${currentVersion(statsPath)}")
 
   /** `file:///a/b` and `/a/b` must compare equal: `_metadata.file_path`
     * reports the Hadoop URI while directory listings yield plain paths.
@@ -124,7 +124,8 @@ object StatsIndex {
   private def udfFreeStrip(c: Column): Column =
     regexp_replace(c, "^file:/+", "/")
 
-  /** The schema-uniform group a file belongs to: everything up to and
+  /** The schema-uniform group a file belongs to — the unit whose
+    * recorded schema ([[UnitSchema]]) its read uses: everything up to and
     * including its last COMMIT segment (`gen=` / `c=` / `base=` /
     * `log=` / `v=` — every engine layout writes one commit as one such
     * dir in one job, so its files share a schema), falling back to the
@@ -156,8 +157,8 @@ object StatsIndex {
     */
   private def statsForFiles(spark: SparkSession, files: Seq[String],
       es: Seq[Entry]): DataFrame =
-    files.groupBy(schemaGroup).values
-      .map(fs => computeStats(spark.read.parquet(fs.toSeq.sorted: _*), es))
+    files.groupBy(schemaGroup)
+      .map { case (g, fs) => computeStats(UnitSchema.read(spark, g, fs.sorted), es) }
       .reduce(_.unionByName(_))
 
   /** Row read of an explicit file list, grouped per commit for the
@@ -166,8 +167,8 @@ object StatsIndex {
     */
   private def readGrouped(spark: SparkSession,
       files: Seq[String]): DataFrame =
-    files.groupBy(schemaGroup).values
-      .map(fs => spark.read.parquet(fs.toSeq.sorted: _*))
+    files.groupBy(schemaGroup)
+      .map { case (g, fs) => UnitSchema.read(spark, g, fs.sorted) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
   private def writeVersion(spark: SparkSession, statsPath: String,
@@ -175,8 +176,7 @@ object StatsIndex {
     // coalesce(1): the stats relation is O(files) rows of scalars — at a
     // million files still a single small parquet; one file keeps every
     // later prune a one-file read
-    stats.coalesce(1).write.mode("errorifexists")
-      .parquet(s"$statsPath/v=$v")
+    UnitSchema.write(stats.coalesce(1), s"$statsPath/v=$v")
     val tmp = Paths.get(statsPath, s"_latest.tmp${System.nanoTime()}")
     Files.writeString(tmp, v.toString,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)

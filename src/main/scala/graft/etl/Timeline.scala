@@ -78,7 +78,7 @@ object Timeline {
       atMs: Option[Long] = None, precountedRows: Option[Long] = None): Long = {
     val next = latestVersion(tablePath).getOrElse(-1L) + 1
     val snapDir = Paths.get(tablePath, s"v=$next")
-    df.write.mode("overwrite").parquet(snapDir.toString)
+    UnitSchema.write(df, snapDir.toString, mode = "overwrite")
     // instant BEFORE the pointer swing: a crash in between leaves an
     // orphan instant for an uncommitted version (harmless — the retry
     // of the same version REPLACEs it), never a committed-and-readable
@@ -108,7 +108,7 @@ object Timeline {
     // the OCC route passes the count it took from the staged files
     // before its lock (the footer sweep must not ride the lock hold)
     val n = precountedRows.getOrElse(
-      spark.read.parquet(s"$tablePath/v=$version").count())
+      readVersion(spark, tablePath, version).count())
     val tmp = dir.resolve(s".$version.tmp${System.nanoTime()}")
     Files.writeString(tmp, s"$version $action $n $tsMs\n",
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
@@ -242,7 +242,7 @@ object Timeline {
 
   /** Time-travel read of a specific version. */
   def readVersion(spark: SparkSession, tablePath: String, version: Long): DataFrame =
-    spark.read.parquet(s"$tablePath/v=$version")
+    UnitSchema.read(spark, s"$tablePath/v=$version")
 
   /** Keyed upsert as a new commit (CoW: merge against latest, write a
     * fresh immutable snapshot).
@@ -304,8 +304,7 @@ object Timeline {
         FsUtil.deleteRecursively(staged) // stale staging from a crash
         // null-safe keep: a row whose key column is NULL against a
         // non-null purge value survives
-        df.filter(!coalesce(pred, lit(false)))
-          .write.parquet(staged.toString)
+        UnitSchema.write(df.filter(!coalesce(pred, lit(false))), staged.toString)
         val live = Paths.get(tablePath, s"v=$v")
         val trash = Paths.get(tablePath, s"_trash_v$v")
         FsUtil.deleteRecursively(trash)
@@ -352,7 +351,7 @@ object Timeline {
     */
   private def refreshInstantCount(spark: SparkSession, tablePath: String,
       version: Long): Unit = {
-    val n = spark.read.parquet(s"$tablePath/v=$version").count()
+    val n = readVersion(spark, tablePath, version).count()
     def rewriteLine(l: String): String = l.trim.split(' ') match {
       case Array(v, a, _) if v.toLong == version => s"$v $a $n"
       case Array(v, a, _, ts) if v.toLong == version => s"$v $a $n $ts"
@@ -515,11 +514,11 @@ object Timeline {
     }
     Files.createDirectories(Paths.get(tablePath))
     val staged = Files.createTempDirectory(Paths.get(tablePath), "_staged-")
-    merged.write.mode("overwrite").parquet(staged.toString)
+    UnitSchema.write(merged, staged.toString, mode = "overwrite")
     // the staged snapshot is immutable: take the instant's row count
     // from its footers NOW, so the critical section does no file
     // reads at all — its cost must not scale with snapshot size
-    val stagedRows = spark.read.parquet(staged.toString).count()
+    val stagedRows = UnitSchema.read(spark, staged.toString).count()
     val committed = FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       if (latestVersion(tablePath) != base) None
       else {

@@ -42,7 +42,7 @@ object Watermark {
   val logPrecombine: String = "created_at"
 
   def readLog(spark: SparkSession, logPath: String): DataFrame =
-    if (Files.exists(Paths.get(logPath))) spark.read.parquet(logPath)
+    if (Files.exists(Paths.get(logPath))) UnitSchema.read(spark, logPath)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], logSchema)
 

@@ -119,4 +119,52 @@ class CatalogSpec extends SparkSpec {
     }
     assert(got == Seq(Set("nope", "42"), Set("42")))
   }
+
+  test("table properties read from the session catalog equal SHOW TBLPROPERTIES") {
+    import spark.implicits._
+    def shown(t: String): Map[String, String] =
+      spark.sql(s"SHOW TBLPROPERTIES $t").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    def same(t: String): Unit =
+      assert(Catalog.tblProps(spark, t) == shown(t), t)
+    // a layout-bound table, then its drop+create entry rewrite
+    val p = Files.createTempDirectory("propsparity").toString + "/t"
+    BucketTable.create(Seq((1L, 1L, 1.0)).toDF("k", "pc", "v"), p,
+      Seq("k"), "pc", numBuckets = 2)
+    Catalog.registerLayoutTable(spark, "props_layout", "bucket", p,
+      validators = Seq("neg" -> "pc < 0 AND 'a''b' != '\\d'"))
+    same("props_layout")
+    assert(Catalog.layoutOf(spark, "props_layout").contains(("bucket", p)))
+    SqlDdl.exec(spark, "ALTER TABLE props_layout RENAME COLUMN v TO amount")
+    same("props_layout")
+    assert(Catalog.renamesOf(spark, "props_layout") == Map("amount" -> "v"))
+    // a plain parquet table, then ALTER ... SET TBLPROPERTIES (a key
+    // matching the redaction pattern is served redacted, as SHOW does)
+    val loc = Files.createTempDirectory("propsplain").toString
+    spark.sql(s"""CREATE TABLE props_plain (a INT) USING PARQUET
+                 |LOCATION '$loc' TBLPROPERTIES ('user.note' = 'it''s')""".stripMargin)
+    same("props_plain")
+    spark.sql("""ALTER TABLE props_plain SET TBLPROPERTIES (
+                |'graft.table.writeConcurrency' = 'occ', 'source.url' = 'secret')""".stripMargin)
+    same("props_plain")
+    assert(Catalog.writeConcurrencyOf(spark, "props_plain") == "occ")
+    assert(Catalog.layoutOf(spark, "props_plain").isEmpty)
+    // qualified names
+    spark.sql("CREATE DATABASE IF NOT EXISTS props_db")
+    val loc2 = Files.createTempDirectory("propsdb").toString
+    spark.sql(s"""CREATE TABLE IF NOT EXISTS props_db.t (a INT) USING PARQUET
+                 |LOCATION '$loc2' TBLPROPERTIES ('k' = 'v')""".stripMargin)
+    Seq("props_db.t", "`props_db`.`t`", "spark_catalog.props_db.t").foreach(same)
+    // a temp view lists nothing; a missing table fails both ways and
+    // the schema-mapping lookups fall back to empty
+    spark.range(1).createOrReplaceTempView("props_view")
+    same("props_view")
+    assert(Catalog.tblProps(spark, "props_view").isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException](shown("props_missing"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      Catalog.tblProps(spark, "props_missing"))
+    assert(Catalog.schemaMapping(spark, "props_missing") ==
+      ((Map.empty, Set.empty, Map.empty)))
+    assert(Catalog.layoutOf(spark, "props_view").isEmpty)
+  }
 }

@@ -396,8 +396,11 @@ class SqlCallSpec extends SparkSpec {
     Catalog.registerLayoutTable(spark, "call_b", "bucket", p)
     // the superseded generation of bucket(1) is reclaimable
     assert(SqlCall.exec(spark, "CALL clean('call_b')").count() >= 1)
+    // show_commits answers from the bucket layout's own commit log
+    assert(SqlCall.exec(spark, "CALL show_commits('call_b')")
+      .select("version").as[Long].collect().toSeq == Seq(1L, 2L))
     val wrongLayout = intercept[IllegalArgumentException] {
-      SqlCall.exec(spark, "CALL show_commits('call_b')")
+      SqlCall.exec(spark, "CALL clean_commits('call_b', 1)")
     }
     assert(wrongLayout.getMessage.contains("timeline"))
     val unknown = intercept[IllegalArgumentException] {
