@@ -1,7 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{CreateStruct, In, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -38,19 +41,20 @@ import scala.jdk.CollectionConverters._
   *                  leading key column, bloom bitmap, row_count
   *   - `_index/_latest` pointer, swapped after the manifest: the index
   *                  is an acceleration structure, so it trails the
-  *                  manifest and [[reconcileIndex]] self-heals any gap
+  *                  manifest and [[indexSnapshot]] self-heals any gap
   *                  (files in the manifest but not the index get
   *                  scanned on the next upsert — never wrong results,
   *                  only lost pruning, same contract as
   *                  [[StatsIndex]])
   *   - `_props`     keys / precombine / tieBreak / mBits / numFiles
   *
-  * Scale: the index is O(files) tiny rows and broadcasts; candidate
-  * tagging is one broadcast probe over the BATCH (each row: one range
-  * compare + K bit tests per surviving file — at very large file
-  * counts, pre-partition the probe by key-range interval the way
-  * Hudi's bloom-index partitioner does). The merge reads only matched
-  * files; the index update scans only freshly written files.
+  * Scale: the index is O(files) tiny rows, read to the driver once per
+  * statement; candidate tagging runs over the BATCH inside its own
+  * checkpoint job (each row: one range compare + K bit tests per file
+  * — at very large file counts, pre-partition the probe by key-range
+  * interval the way Hudi's bloom-index partitioner does). The merge
+  * reads only matched files; the index update scans only freshly
+  * written files.
   */
 object BloomTable {
 
@@ -437,16 +441,9 @@ object BloomTable {
     * `_metadata.file_path`-addressable provenance, i.e. be a fresh
     * parquet read of exactly the files to index): leading-key
     * min/max, row count, bloom bitmap of the full composite key.
-    * One pass, map-side combined.
+    * One pass, map-side combined. The pass reads ONLY the key column
+    * and file metadata (column pruning).
     */
-  /** `private[graft]` so plan tooling can dump the scan shape (the
-    * post-write stats pass reads ONLY the key column + file metadata —
-    * column pruning makes the "re-read of just-written files" a
-    * key-column scan, not a full-width one).
-    */
-  private[graft] def indexRowsForDump(df: DataFrame, tablePath: String): DataFrame =
-    indexRows(df, props(tablePath))
-
   private def indexRows(df: DataFrame, p: Props): DataFrame = {
     val bloom = udaf(new graft.functions.BloomAggregator(p.mBits))
     withKeyHashes(df, p.keys)
@@ -494,14 +491,19 @@ object BloomTable {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def listCommitFiles(tablePath: String, commit: Long): Seq[String] = {
-    val dir = Paths.get(tablePath, s"c=$commit")
+  /** The data files of a unit dir, sorted. */
+  private def listParquet(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .map(n => s"c=$commit/$n").toSeq.sorted
+    try s.iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq.sortBy(_.getFileName.toString)
     finally s.close()
   }
+
+  private def listCommitFiles(tablePath: String, commit: Long): Seq[String] =
+    listParquet(Paths.get(tablePath, s"c=$commit"))
+      .map(f => s"c=$commit/${f.getFileName}")
 
   /** Files of ONE unit — a `c=N` commit dir, or the bootstrap source
     * dir — read with the unit's recorded schema.
@@ -561,10 +563,35 @@ object BloomTable {
     */
   private def writeCommit(df: DataFrame, tablePath: String, commit: Long,
       p: Props, files: Int): Seq[String] = {
-    UnitSchema.write(df.repartitionByRange(math.max(1, files), col(p.keys.head)),
-      s"$tablePath/c=$commit")
+    UnitSchema.write(rangeClustered(df, p, files), s"$tablePath/c=$commit")
     listCommitFiles(tablePath, commit)
   }
+
+  private def rangeClustered(df: DataFrame, p: Props, files: Int): DataFrame =
+    df.repartitionByRange(math.max(1, files), col(p.keys.head))
+
+  /** `df` plus a boolean `flag`: whether the row's key is in `set`,
+    * distinct key rows of type `keyType` a statement observed. Keys
+    * with a NULL part are left out (an equi-join never matches them).
+    * Up to [[InListMax]] keys the test is a literal `IN` (no join, no
+    * broadcast job); past that it is a broadcast join against the keys
+    * as a local relation, so the plan stays O(1) — the [[filesIn]]
+    * policy for key sets.
+    */
+  private def withKeyFlag(spark: SparkSession, df: DataFrame, keys: Seq[String],
+      set: Iterable[Any], keyType: StructType, flag: String): DataFrame = {
+    val rows = set.map(_.asInstanceOf[Row]).filterNot(_.toSeq.contains(null)).toSeq
+    if (rows.sizeIs <= InListMax) df.withColumn(flag,
+      if (rows.isEmpty) lit(false)
+      else org.apache.spark.sql.graftbridge.Bridge.column(In(
+        CreateStruct(keys.map(UnresolvedAttribute.quoted)),
+        rows.map(Literal.create(_, keyType)))))
+    else df.join(broadcast(spark.createDataFrame(rows.asJava, keyType)
+        .withColumn(flag, lit(true))), keys, "left")
+      .select(df.columns.map(col) :+ coalesce(col(flag), lit(false)).as(flag): _*)
+  }
+
+  private def keyStruct(keys: Seq[String]): Column = struct(keys.map(col): _*)
 
   private def nextCommit(tablePath: String): Long = {
     val live = manifest(tablePath).flatMap(f =>
@@ -733,67 +760,132 @@ object BloomTable {
   private[graft] val dataScans = new java.util.concurrent.atomic.LongAdder
   @volatile private[graft] var lastOccInLockDataScans: Long = -1L
 
-  /** Index rows reconciled to the CURRENT manifest: rows for retired
-    * files dropped; live files the index has not seen (a writer that
-    * crashed between the manifest swap and the index swap) scanned and
-    * folded in now. Correctness of candidate tagging therefore never
-    * depends on the index being current — missing rows are healed
-    * before they could cause a missed match.
+  /** The statement's view of the file index: the `_index/v=M` rows of
+    * the live files, on the driver. Read ONCE per statement — the same
+    * O(files) rows the probe used to broadcast — and everything the
+    * statement needs comes from it: the indexed-file set, the tag
+    * literal, and the kept rows of the next index version. Live files
+    * the index has not seen (a writer that crashed between the
+    * manifest swap and the index swap) are scanned and folded in here,
+    * so candidate tagging never depends on the index being current —
+    * missing rows are healed before they could cause a missed match,
+    * and `healed` rows are persisted by the statement's index write.
     */
-  private def reconcileIndex(spark: SparkSession, tablePath: String,
-      p: Props): DataFrame = reconcile(spark, tablePath, p)._1
+  private final case class IndexSnapshot(rows: Seq[Row], schema: StructType,
+      tablePath: String) {
+    private def fileOf(r: Row): String = r.getAs[String]("file")
 
-  /** [[reconcileIndex]] for a statement that consumes the rows more
-    * than once: materialized only when the reconcile scanned missing
-    * files (that scan must not run twice); otherwise the rows are a
-    * filter over the immutable `_index/v=M`, which is tiny and cheaper
-    * to re-read than to checkpoint.
-    */
-  private def reconcileIndexOnce(spark: SparkSession, tablePath: String,
-      p: Props): DataFrame = {
-    val (idx, healed) = reconcile(spark, tablePath, p)
-    if (healed) idx.localCheckpoint() else idx
+    /** The snapshot restricted to (`keep`) or without the absolute `files`. */
+    def filter(files: Seq[String], keep: Boolean): IndexSnapshot = {
+      val fs = files.toSet
+      copy(rows = rows.filter(r => fs(fileOf(r)) == keep))
+    }
+
+    /** The rows as a local relation — no Spark job to read them. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+
+    /** Table-relative paths of the rows at `ordinals`. */
+    def files(ordinals: Iterable[Int]): Seq[String] =
+      ordinals.toSeq.distinct.map(i => relFile(tablePath, fileOf(rows(i)))).sorted
   }
 
-  /** The reconciled index rows and whether any data file was scanned. */
-  private def reconcile(spark: SparkSession, tablePath: String,
-      p: Props): (DataFrame, Boolean) = {
+  private def indexSnapshot(spark: SparkSession, tablePath: String,
+      p: Props): IndexSnapshot = {
     val live = absFiles(tablePath, manifest(tablePath))
-    val idx = filesIn(spark, readIndex(spark, tablePath), live, keep = true)
-    val indexed = idx.select("file").collect().map(_.getString(0)).toSet
-    val missing = live.filterNot(indexed)
-    if (missing.isEmpty) (idx, false)
-    else (idx.unionByName(
+    val liveSet = live.toSet
+    val idx = readIndex(spark, tablePath)
+    val indexed = idx.collect().toSeq.filter(r => liveSet(r.getAs[String]("file")))
+    val have = indexed.map(_.getAs[String]("file")).toSet
+    val missing = live.filterNot(have)
+    if (missing.isEmpty) IndexSnapshot(indexed, idx.schema, tablePath)
+    else {
       // the missing files may span commits whose schemas differ
       // (evolution, type widening); index rows have a fixed shape, so
       // compute per commit dir and union the RESULTS (indexRows needs
       // each group's own `_metadata.file_path`, which unions drop)
-      missing.groupBy(f => f.substring(0, f.lastIndexOf('/'))).values
-        .map { fs =>
-          dataScans.increment()
-          indexRows(readUnitFiles(spark, fs.toSeq.sorted), p)
-        }
-        .reduce(_.unionByName(_))), true)
+      val healed = spark.createDataFrame(indexed.asJava, idx.schema).unionByName(
+        missing.groupBy(f => f.substring(0, f.lastIndexOf('/'))).values
+          .map { fs =>
+            dataScans.increment()
+            indexRows(readUnitFiles(spark, fs.toSeq.sorted), p)
+          }
+          .reduce(_.unionByName(_)))
+      IndexSnapshot(healed.collect().toSeq, healed.schema, tablePath)
+    }
   }
 
-  /** Relative paths of live files that MAY contain at least one key of
-    * `batch` (range ∩ bloom tagging — Hudi's `tagLocation`). The probe
-    * broadcasts the O(files) index and runs over the batch; survivors
-    * come to the driver because the driver plans the merge's file list.
+  private val TagCol = "__tag"
+
+  /** `df` plus [[TagCol]]: the ordinals of the snapshot rows whose
+    * file MAY contain the row's key (range ∩ bloom tagging — Hudi's
+    * `tagLocation`). The snapshot rows travel as one literal array,
+    * shipped with the stage's task binary once per executor; each row
+    * pays one range compare plus K bit tests per file. `df` must carry
+    * the key columns.
     */
-  private def candidateFiles(tablePath: String, batch: DataFrame,
-      idx: DataFrame, p: Props): Seq[String] = {
-    withKeyHashes(batch, p.keys)
+  private def withTag(df: DataFrame, snap: IndexSnapshot, p: Props): DataFrame = {
+    val ks = StructType(Seq(StructField("i", IntegerType, nullable = false),
+      snap.schema("key_min"), snap.schema("key_max"), snap.schema("bloom")))
+    val entries = snap.rows.zipWithIndex.map { case (r, i) =>
+      Row(i, r.getAs[Any]("key_min"), r.getAs[Any]("key_max"), r.getAs[Any]("bloom"))
+    }
+    val cols = df.columns.toSeq
+    withKeyHashes(df, p.keys)
       .withColumn("__poss", expr(positions(p.mBits)))
-      .select(col(p.keys.head).as("__k0"), col("__poss"))
-      .join(broadcast(idx),
-        col("__k0") >= col("key_min") && col("__k0") <= col("key_max"))
-      .filter(expr(
-        """forall(__poss, p ->
-          | (element_at(bloom, CAST(p DIV 64 AS INT) + 1)
-          |  & shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))) != 0)""".stripMargin))
-      .select(col("file")).distinct()
-      .collect().map(r => relFile(tablePath, r.getString(0))).toSeq.sorted
+      .withColumn("__k0", col(p.keys.head))
+      .withColumn("__idx", org.apache.spark.sql.graftbridge.Bridge.column(
+        Literal.create(entries, ArrayType(ks, containsNull = false))))
+      .withColumn(TagCol, expr(
+        """transform(filter(__idx, f ->
+          | __k0 >= f.key_min AND __k0 <= f.key_max AND
+          | forall(__poss, p ->
+          |  (element_at(f.bloom, CAST(p DIV 64 AS INT) + 1)
+          |   & shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))) != 0)),
+          | f -> f.i)""".stripMargin))
+      .select((cols :+ TagCol).map(col): _*)
+  }
+
+  /** Checkpoint `df` and tag it in the same job: the row count, the
+    * candidate files of its keys and the values of `aggs` all ride the
+    * checkpoint as observed metrics ([[Fuse.checkpointObserved]], the
+    * way bucket and partitioned route their batches). An empty
+    * snapshot has no candidates and skips the tag.
+    */
+  private def checkpointTagged(df: DataFrame, snap: IndexSnapshot, p: Props,
+      aggs: Column*): (DataFrame, Long, Seq[String], IndexedSeq[Any]) = {
+    val tagged = if (snap.rows.isEmpty) df.withColumn(TagCol, typedLit(Seq.empty[Int]))
+      else withTag(df, snap, p)
+    val (ck, vs) = Fuse.checkpointObserved(tagged,
+      (count(lit(1)) +: collect_set(col(TagCol)) +: aggs): _*)
+    val ordinals = vs(1).asInstanceOf[scala.collection.Seq[scala.collection.Seq[Int]]].flatten
+    (ck.drop(TagCol), vs.head.asInstanceOf[Number].longValue(),
+      snap.files(ordinals), vs.drop(2))
+  }
+
+  /** Table-relative files that may hold a key of `keyRows` — the
+    * statement tag as a probe of its own (`BloomTagProps` checks it
+    * against a reference tagger).
+    */
+  private[etl] def candidates(spark: SparkSession, tablePath: String,
+      keyRows: DataFrame): Seq[String] = {
+    val p = props(tablePath)
+    checkpointTagged(keyRows.select(p.keys.map(col): _*),
+      indexSnapshot(spark, tablePath, p), p)._3
+  }
+
+  /** The next index version's rows: the snapshot minus the files the
+    * commit retired, plus one row per file it wrote. The written files
+    * are read as one partition, so the per-file aggregation needs no
+    * shuffle and the whole version is one job.
+    */
+  private def nextIndexRows(spark: SparkSession, tablePath: String,
+      snap: IndexSnapshot, retired: Seq[String], written: Seq[String],
+      p: Props): DataFrame = {
+    val kept = snap.filter(absFiles(tablePath, retired), keep = false).frame(spark)
+    if (written.isEmpty) kept
+    else kept.unionByName(indexRows(
+      readUnitFiles(spark, absFiles(tablePath, written)).coalesce(1), p))
   }
 
   /** Bloom-routed upsert: tag the batch to candidate files, merge
@@ -850,37 +942,47 @@ object BloomTable {
   private def upsertIntoLocked(spark: SparkSession, tablePath: String,
       incoming: DataFrame, validators: Seq[PreCommit.Rule]): Seq[String] = {
     val p = props(tablePath)
-    // the emptiness gate rides the batch checkpoint as an observed
-    // count — no separate isEmpty job (guide §2.4)
-    val (batch, batchN) = Fuse.checkpointCounted(
-      HudiLike.precombineLatest(incoming, p.keys, p.precombine, p.tieBreak))
+    val snap = indexSnapshot(spark, tablePath, p)
+    // the emptiness gate and the candidate files ride the batch
+    // checkpoint as observed metrics. Validators judge the precombined batch (a superseded duplicate
+    // cannot veto); without them the merge's own window resolves
+    // duplicate batch keys — one window over table and batch orders
+    // rows exactly as precombine-then-merge does
+    val (batch, batchN, touched, _) = checkpointTagged(
+      if (validators.isEmpty) incoming
+      else HudiLike.precombineLatest(incoming, p.keys, p.precombine, p.tieBreak),
+      snap, p)
     if (batchN == 0L) return Seq.empty
-    // gate BEFORE any tagging or write: a rejected batch leaves the
-    // table byte-identical (PreCommit's contract)
+    // gate BEFORE any write: a rejected batch leaves the table
+    // byte-identical (PreCommit's contract)
     PreCommit.validate(batch, validators)
-    // reconcile once, reuse for tagging AND as the base of the next
-    // index version — a healed gap is persisted, not re-healed forever
-    val idx = reconcileIndexOnce(spark, tablePath, p)
-    val touched = candidateFiles(tablePath, batch, idx, p)
     val commit = nextCommit(tablePath)
     val existing =
       if (touched.isEmpty) batch.limit(0)
       else readFiles(spark, tablePath, touched)
     val bound = boundSecondaryIndexes(tablePath)
-    val merged = HudiLike.upsert(existing, batch, p.keys, p.precombine, p.tieBreak)
+    // each row of the merge carries its key's prior secondary values,
+    // so the write job itself observes every mapping the batch moved
+    val merged = HudiLike.upsert(existing, batch, p.keys, p.precombine,
+      p.tieBreak, prior = bound.flatMap(_._1).distinct)
     // file budget for the rewritten region: keep the region's file
     // count (+1 when pure append) so file sizes stay level without a
     // table-wide count() job; compact() re-levels the whole table
-    val written = writeCommit(merged, tablePath, commit, p,
-      math.max(1, touched.size))
+    // observed after the range exchange, so the sampler's pass over
+    // the merge does not count
+    val moved = Fuse.writeObserved(
+      rangeClustered(merged, p, math.max(1, touched.size)),
+      bound.map(b => movedMappings(b._1, p.keys)): _*)(o =>
+      UnitSchema.write(o.drop(HudiLike.PriorCol), s"$tablePath/c=$commit"))
+    val written = listCommitFiles(tablePath, commit)
     val newManifest = (manifest(tablePath).toSet -- touched) ++ written
-    writeSchema(tablePath, merged)
+    writeSchema(tablePath, merged.drop(HudiLike.PriorCol))
     // an upsert can only change the BATCH's keys: the region's other
     // rows are copied byte-equal into the new files and would diff to
     // filtered-out no-ops — restrict both diff sides to the batch keys
-    // so the cdc join and the index reconcile aggregate O(batch) rows,
-    // not O(region) (guide §2.3)
-    def batchKeys = batch.select(p.keys.map(col): _*) // precombined: unique
+    // so the cdc join aggregates O(batch) rows, not O(region)
+    // (guide §2.3)
+    def batchKeys = batch.select(p.keys.map(col): _*)
     writeManifest(tablePath, newManifest.toSeq, commit, "write",
       CdcLog.Action.Changes { () =>
         CdcLog.diff(
@@ -888,17 +990,55 @@ object BloomTable {
           readFiles(spark, tablePath, written)
             .join(broadcast(batchKeys), p.keys, "leftsemi"), p.keys)
       })
-    val keptIdx = filesIn(spark, idx, absFiles(tablePath, touched),
-      keep = false)
     writeIndex(tablePath,
-      keptIdx.unionByName(
-        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p)),
+      nextIndexRows(spark, tablePath, snap, touched, written, p),
       nextIndexVersion(tablePath))
-    maintainBound(spark, tablePath, bound,
-      Some(existing.join(broadcast(batchKeys), p.keys, "leftsemi")),
-      readFiles(spark, tablePath, written)
-        .join(broadcast(batchKeys), p.keys, "leftsemi"), p, commit)
+    maintainBound(spark, bound, commit) { (secCols, i) =>
+      Some(moved(i).asInstanceOf[scala.collection.Seq[Row]]).filter(_.nonEmpty)
+        .map(movedDelta(spark, merged.schema, secCols, p.keys, _))
+    }
     touched
+  }
+
+  /** Observed over a merge that carries [[HudiLike.PriorCol]]: one
+    * `(pre, post, key)` struct per row whose `secCols` mapping the
+    * merge moved — `pre` NULL for a new key. Rows of keys outside the
+    * batch keep their prior values and are never collected, so the
+    * list the driver receives is O(batch).
+    */
+  private def movedMappings(secCols: Seq[String], keys: Seq[String]): Column = {
+    val prior = col(HudiLike.PriorCol)
+    val pre = when(prior.isNotNull,
+      struct(secCols.map(c => prior.getField(c).as(c)): _*))
+    val post = struct(secCols.map(col): _*)
+    collect_list(when(prior.isNull || !(pre <=> post),
+      struct(pre.as("pre"), post.as("post"), struct(keys.map(col): _*).as("k"))))
+  }
+
+  /** The index delta of [[movedMappings]]' rows: the pre mapping flips
+    * dead, the post mapping upserts live (the [[SecondaryIndex.sideDiff]]
+    * shape).
+    */
+  private def movedDelta(spark: SparkSession, schema: StructType,
+      secCols: Seq[String], keys: Seq[String],
+      moved: scala.collection.Seq[Row]): DataFrame =
+    localDelta(spark, schema, secCols, keys, moved.flatMap { m =>
+      val k = m.getStruct(2).toSeq
+      Option(m.getStruct(0)).map(pre => Row.fromSeq(pre.toSeq ++ k :+ false)).toSeq :+
+        Row.fromSeq(m.getStruct(1).toSeq ++ k :+ true)
+    })
+
+  /** Mapping-delta rows `(sec…, key…, live)` observed on the driver as
+    * an index delta frame, typed from the table's `schema`. One
+    * partition: the rows are on the driver already, and the index
+    * upsert's precombine then needs no shuffle.
+    */
+  private def localDelta(spark: SparkSession, schema: StructType,
+      secCols: Seq[String], keys: Seq[String],
+      rows: scala.collection.Seq[Row]): DataFrame = {
+    val out = StructType((secCols ++ keys).map(c => schema(c).copy(nullable = true)) :+
+      StructField(SecondaryIndex.LiveCol, BooleanType))
+    spark.createDataFrame(rows.asJava, out).coalesce(1)
   }
 
   /** One FILE-level optimistic-concurrency attempt against the `m0`
@@ -926,17 +1066,17 @@ object BloomTable {
       incoming: DataFrame, m0: Seq[String],
       validators: Seq[PreCommit.Rule] = Nil): Option[Seq[String]] = {
     val p = props(tablePath)
-    val (batch, batchN) = Fuse.checkpointCounted(
-      HudiLike.precombineLatest(incoming, p.keys, p.precombine, p.tieBreak))
-    if (batchN == 0L) return Some(Seq.empty)
-    PreCommit.validate(batch, validators)
     // tag against the m0 VIEW: live index rows restricted to m0's
     // files (an m0 file a concurrent commit already retired drops out
     // here — its rewritten content surfaces as ADDED files, which
     // check (b) probes)
-    val idx = filesIn(spark, reconcileIndex(spark, tablePath, p),
-      absFiles(tablePath, m0), keep = true).localCheckpoint()
-    val touched = candidateFiles(tablePath, batch, idx, p)
+    val snap0 = indexSnapshot(spark, tablePath, p)
+      .filter(absFiles(tablePath, m0), keep = true)
+    val (batch, batchN, touched, _) = checkpointTagged(
+      HudiLike.precombineLatest(incoming, p.keys, p.precombine, p.tieBreak),
+      snap0, p)
+    if (batchN == 0L) return Some(Seq.empty)
+    PreCommit.validate(batch, validators)
     val existing =
       if (touched.isEmpty) batch.limit(0)
       else readFiles(spark, tablePath, touched)
@@ -954,7 +1094,9 @@ object BloomTable {
     // must not scale with commit size; that is what OCC exists to
     // avoid, and Hudi's in-lock validation is likewise metadata-only.
     dataScans.increment()
-    val stagedContent = UnitSchema.read(spark, staged.toString)
+    // by file list: a root path named `_staged-…` is hidden to Spark
+    val stagedContent = UnitSchema.read(spark, staged.toString,
+      listParquet(staged).map(_.toString))
     val cdcRows =
       if (CdcLog.enabled(tablePath))
         Some(CdcLog.diff(existing, stagedContent, p.keys).localCheckpoint())
@@ -971,11 +1113,14 @@ object BloomTable {
         val removedSince = m0.toSet -- m1.toSet
         val addedSince = (m1.toSet -- m0.toSet).toSeq.sorted
         val readConflict = touched.exists(removedSince)
-        lazy val addConflict = addedSince.nonEmpty && {
-          val addedIdx = filesIn(spark, reconcileIndex(spark, tablePath, p),
-            absFiles(tablePath, addedSince), keep = true)
-          candidateFiles(tablePath, batch, addedIdx, p).nonEmpty
-        }
+        // reconcile BEFORE the manifest swing: against m1 every live
+        // file is indexed, so the heal path (which would scan data
+        // files) cannot trigger; after the swing it would "heal" the
+        // just-written files we already have rows for in stagedIdx
+        lazy val snap1 = indexSnapshot(spark, tablePath, p)
+        lazy val addConflict = addedSince.nonEmpty &&
+          checkpointTagged(batch, snap1.filter(
+            absFiles(tablePath, addedSince), keep = true), p)._3.nonEmpty
         if (readConflict || addConflict) None
         else {
           val commit = nextCommit(tablePath)
@@ -983,12 +1128,8 @@ object BloomTable {
             StandardCopyOption.ATOMIC_MOVE)
           val written = listCommitFiles(tablePath, commit)
           writeSchema(tablePath, merged)
-          // reconcile BEFORE the manifest swing: against m1 every live
-          // file is indexed, so the heal path (which would scan data
-          // files) cannot trigger; after the swing it would "heal" the
-          // just-written files we already have rows for in stagedIdx
-          val keptIdx = filesIn(spark, reconcileIndex(spark, tablePath, p),
-            absFiles(tablePath, touched), keep = false)
+          val keptIdx = snap1.filter(absFiles(tablePath, touched),
+            keep = false).frame(spark)
           writeManifest(tablePath,
             ((m1.toSet -- touched) ++ written).toSeq, commit, "write",
             CdcLog.Action.Changes { () =>
@@ -1012,8 +1153,8 @@ object BloomTable {
         FsUtil.deleteRecursively(staged)
         None
       case Some((commit, written)) =>
-        maintainBound(spark, tablePath, bound, Some(existing),
-          readFiles(spark, tablePath, written), p, commit)
+        maintainBound(spark, bound, commit)(
+          regionDelta(bound, existing, readFiles(spark, tablePath, written), p))
         Some(written)
     }
   }
@@ -1054,21 +1195,34 @@ object BloomTable {
   private def deleteFromLocked(spark: SparkSession, tablePath: String,
       keysToDelete: DataFrame): Seq[String] = {
     val p = props(tablePath)
-    val (keyRel, keyN) = Fuse.checkpointCounted(
-      keysToDelete.select(p.keys.map(col): _*).distinct())
-    if (keyN == 0L) return Seq.empty
-    val idx = reconcileIndexOnce(spark, tablePath, p)
-    val touched = candidateFiles(tablePath, keyRel, idx, p)
-    if (touched.isEmpty) return Seq.empty
+    val snap = indexSnapshot(spark, tablePath, p)
+    // the distinct keys come back as an observed set with the tag —
+    // no dedup shuffle, and a short key set flags victims without a join
+    val (keyRel, keyN, touched, Seq(keySet)) = checkpointTagged(
+      keysToDelete.select(p.keys.map(col): _*), snap, p, collect_set(keyStruct(p.keys)))
+    if (keyN == 0L || touched.isEmpty) return Seq.empty
     val existing = readFiles(spark, tablePath, touched)
     val bound = boundSecondaryIndexes(tablePath)
-    val remaining = existing.join(keyRel, p.keys, "left_anti")
+    val victim = "__victim"
+    val flagged = withKeyFlag(spark, existing, p.keys,
+      keySet.asInstanceOf[scala.collection.Seq[Any]],
+      StructType(p.keys.map(k => keyRel.schema(k))), victim)
+    val remaining = flagged.filter(!col(victim)).drop(victim)
     val commit = nextCommit(tablePath)
+    // the write job observes the survivor count and every victim's
+    // mappings (the range sampler re-reads its input, so values may
+    // arrive twice: only the count's sign and the distinct mappings
+    // are used)
+    val obs = Fuse.writeObserved(flagged, (count(when(!col(victim), 1)) +:
+      bound.map { case (secCols, _) =>
+        collect_set(when(col(victim), struct((secCols ++ p.keys).map(col): _*)))
+      }): _*)(o => UnitSchema.write(rangeClustered(
+        o.filter(!col(victim)).drop(victim), p, touched.size), s"$tablePath/c=$commit"))
     // the whole candidate region may empty out — then the commit is
     // pure retirement: no new files, just the manifest shrinking
     val written =
-      if (remaining.isEmpty) Seq.empty
-      else writeCommit(remaining, tablePath, commit, p, touched.size)
+      if (obs.head.asInstanceOf[Number].longValue() > 0L) listCommitFiles(tablePath, commit)
+      else { FsUtil.deleteRecursively(Paths.get(tablePath, s"c=$commit")); Seq.empty }
     writeSchema(tablePath, remaining)
     // a delete only changes the VICTIM keys: survivors are copied
     // byte-equal and would diff to no-ops — the before side restricts
@@ -1082,16 +1236,15 @@ object BloomTable {
         val victims = existing.join(broadcast(keyRel), p.keys, "leftsemi")
         CdcLog.diff(victims, victims.limit(0), p.keys)
       })
-    val keptIdx = filesIn(spark, idx, absFiles(tablePath, touched),
-      keep = false)
-    val nextIdx =
-      if (written.isEmpty) keptIdx
-      else keptIdx.unionByName(
-        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
-    writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
-    maintainBound(spark, tablePath, bound,
-      Some(existing.join(broadcast(keyRel), p.keys, "leftsemi")),
-      existing.limit(0), p, commit)
+    writeIndex(tablePath,
+      nextIndexRows(spark, tablePath, snap, touched, written, p),
+      nextIndexVersion(tablePath))
+    // every victim's mapping flips dead
+    maintainBound(spark, bound, commit) { (secCols, i) =>
+      val dead = obs(i + 1).asInstanceOf[scala.collection.Seq[Row]]
+      Option.when(dead.nonEmpty)(localDelta(spark, existing.schema, secCols,
+        p.keys, dead.map(r => Row.fromSeq(r.toSeq :+ false))))
+    }
     touched
   }
 
@@ -1112,12 +1265,11 @@ object BloomTable {
   private def rewriteKeysLocked(spark: SparkSession, tablePath: String,
       keyRows: DataFrame, transform: DataFrame => DataFrame): Seq[String] = {
     val p = props(tablePath)
-    val (keyRel, keyN) = Fuse.checkpointCounted(
-      keyRows.select(p.keys.map(col): _*).distinct())
+    val snap = indexSnapshot(spark, tablePath, p)
+    val (_, keyN, touched, _) = checkpointTagged(
+      keyRows.select(p.keys.map(col): _*), snap, p)
     if (keyN == 0L) Seq.empty
     else {
-      val idx = reconcileIndexOnce(spark, tablePath, p)
-      val touched = candidateFiles(tablePath, keyRel, idx, p)
       val existing =
         if (touched.isEmpty) read(spark, tablePath).limit(0)
         else readFiles(spark, tablePath, touched)
@@ -1136,14 +1288,11 @@ object BloomTable {
             else readFiles(spark, tablePath, written)
           CdcLog.diff(existing, after, p.keys)
         })
-      val keptIdx = filesIn(spark, idx, absFiles(tablePath, touched),
-        keep = false)
-      val nextIdx =
-        if (written.isEmpty) keptIdx
-        else keptIdx.unionByName(
-          indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
-      writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
-      maintainBound(spark, tablePath, bound, Some(existing), next, p, commit)
+      writeIndex(tablePath,
+        nextIndexRows(spark, tablePath, snap, touched, written, p),
+        nextIndexVersion(tablePath))
+      maintainBound(spark, bound, commit)(
+        regionDelta(bound, existing, next, p))
       touched
     }
   }
@@ -1166,9 +1315,9 @@ object BloomTable {
     val p = props(tablePath)
     val live = manifest(tablePath)
     if (live.isEmpty) return Seq.empty
-    // reconcile against the PRE-rewrite manifest, reused for the index
+    // the index as of the PRE-rewrite manifest, reused for the index
     // update below (same shape as the delete path)
-    val idx = reconcileIndexOnce(spark, tablePath, p)
+    val snap = indexSnapshot(spark, tablePath, p)
     val touched = live.groupBy(_.takeWhile(_ != '/')).values.map { fs =>
       readUnitFiles(spark, absFiles(tablePath, fs.toSeq))
         .withColumn("__fp",
@@ -1194,15 +1343,11 @@ object BloomTable {
           else readFiles(spark, tablePath, written)
         CdcLog.diff(before, after, p.keys)
       })
-    val keptIdx = filesIn(spark, idx, absFiles(tablePath, touched),
-      keep = false)
-    val nextIdx =
-      if (written.isEmpty) keptIdx
-      else keptIdx.unionByName(
-        indexRows(readUnitFiles(spark, absFiles(tablePath, written)), p))
-    writeIndex(tablePath, nextIdx, nextIndexVersion(tablePath))
-    maintainBound(spark, tablePath, bound,
-      Some(readFiles(spark, tablePath, touched)), next, p, commit)
+    writeIndex(tablePath,
+      nextIndexRows(spark, tablePath, snap, touched, written, p),
+      nextIndexVersion(tablePath))
+    maintainBound(spark, bound, commit)(
+      regionDelta(bound, readFiles(spark, tablePath, touched), next, p))
     touched
   }
 
@@ -1214,13 +1359,16 @@ object BloomTable {
   def lookupMany(spark: SparkSession, tablePath: String,
       keyRows: DataFrame): DataFrame = {
     val p = props(tablePath)
-    val wanted = keyRows.select(p.keys.map(col): _*).distinct()
-      .localCheckpoint()
-    val candidates = candidateFiles(tablePath, wanted,
-      reconcileIndex(spark, tablePath, p), p)
+    val keys = keyRows.select(p.keys.map(col): _*)
+    // the key dedup rides the probe's checkpoint too: the distinct
+    // keys come back to the driver as an observed set and filter the
+    // fetch
+    val (_, _, candidates, Seq(wanted)) = checkpointTagged(keys,
+      indexSnapshot(spark, tablePath, p), p, collect_set(keyStruct(p.keys)))
     if (candidates.isEmpty) read(spark, tablePath).limit(0)
-    else readFiles(spark, tablePath, candidates)
-      .join(broadcast(wanted), p.keys, "left_semi")
+    else withKeyFlag(spark, readFiles(spark, tablePath, candidates), p.keys,
+      wanted.asInstanceOf[scala.collection.Seq[Any]], keys.schema, "__wanted")
+      .filter(col("__wanted")).drop("__wanted")
   }
 
   // ---- bound secondary index (see SecondaryIndex.createBloom) --------
@@ -1254,27 +1402,35 @@ object BloomTable {
   def unbindSecondaryIndex(tablePath: String, indexPath: String): Unit =
     SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
 
-  /** Reconcile every bound index from the SAME pre/post row states of
-    * a commit's touched region (a superset of what changed — except()
-    * drops the unchanged mappings), then record the commit covered.
-    * Runs after the manifest swing; the crash window is caught by the
-    * covered-head serve check ([[SecondaryIndex.ensureCurrent]]).
+  /** Commit each bound index's mapping delta for commit `commitNo` —
+    * `delta(secCols, i)` for the i-th binding, None when nothing moved
+    * — then record the commit covered. Runs after the manifest swing;
+    * the crash window is caught by the covered-head serve check
+    * ([[SecondaryIndex.ensureCurrent]]).
     */
-  private def maintainBound(spark: SparkSession, tablePath: String,
-      bound: Seq[(Seq[String], String)], pre: Option[DataFrame],
-      post: => DataFrame, p: Props, commitNo: Long): Unit =
-    for (preDf <- pre if bound.nonEmpty) {
-      // sideDiff consumes post once per index — materialize it only
-      // when SEVERAL indexes would each re-evaluate the probe
-      val postC = if (bound.sizeIs > 1) post.localCheckpoint() else post
-      for ((secCols, idxPath) <- bound)
-        SecondaryIndex.withMaintLock(idxPath) {
-          val mapCols = (secCols ++ p.keys).map(col)
-          SecondaryIndex.reconcile(spark, idxPath,
-            preDf.select(mapCols: _*), postC.select(mapCols: _*))
-          SecondaryIndex.markCoveredLocked(idxPath, commitNo)
-        }
+  private def maintainBound(spark: SparkSession,
+      bound: Seq[(Seq[String], String)], commitNo: Long)(
+      delta: (Seq[String], Int) => Option[DataFrame]): Unit =
+    for (((secCols, idxPath), i) <- bound.zipWithIndex)
+      SecondaryIndex.withMaintLock(idxPath) {
+        delta(secCols, i).foreach(SecondaryIndex.applyDelta(spark, idxPath, _))
+        SecondaryIndex.markCoveredLocked(idxPath, commitNo)
+      }
+
+  /** The delta between the pre/post row states of a commit's touched
+    * region (a superset of what changed — the diff drops the unchanged
+    * mappings), for statements whose transform may touch any region
+    * row. `post` is materialized only when SEVERAL indexes would each
+    * re-evaluate it.
+    */
+  private def regionDelta(bound: Seq[(Seq[String], String)], pre: DataFrame,
+      post: => DataFrame, p: Props): (Seq[String], Int) => Option[DataFrame] = {
+    lazy val postC = if (bound.sizeIs > 1) post.localCheckpoint() else post
+    (secCols, _) => {
+      val mapCols = (secCols ++ p.keys).map(col)
+      Some(SecondaryIndex.sideDiff(pre.select(mapCols: _*), postC.select(mapCols: _*)))
     }
+  }
 
   /** Point lookup by full key: probe the index, read only candidate
     * files (usually one: ranges are non-overlapping per commit and the
@@ -1286,11 +1442,16 @@ object BloomTable {
     require(keyValues.length == p.keys.length,
       s"expected ${p.keys.length} key values (${p.keys.mkString(",")})")
     val schema = read(spark, tablePath).schema
-    val probe = p.keys.zip(keyValues).foldLeft(spark.range(1).toDF()) {
+    // a one-row LOCAL probe: its tag evaluates on the driver, no job
+    val probe = p.keys.zip(keyValues).foldLeft(spark.createDataFrame(
+      java.util.List.of(Row()), StructType(Nil))) {
       case (df, (k, v)) => df.withColumn(k, lit(v).cast(schema(k).dataType))
     }
-    val candidates = candidateFiles(tablePath, probe,
-      reconcileIndex(spark, tablePath, p), p)
+    val snap = indexSnapshot(spark, tablePath, p)
+    val candidates =
+      if (snap.rows.isEmpty) Seq.empty
+      else snap.files(withTag(probe, snap, p).select(TagCol).collect()
+        .flatMap(_.getSeq[Int](0)))
     if (candidates.isEmpty)
       return read(spark, tablePath).limit(0)
     // candidates may span commits whose schemas differ (evolution,

@@ -1184,7 +1184,7 @@ object BucketTable {
     * combinations probe in ONE plan — the probe values become a local
     * frame (checkpointed once), route to their buckets in one tiny
     * job, the touched buckets read as ONE scan, and a null-safe
-    * semi-join keeps exactly the probed combinations' rows. The
+    * filter keeps exactly the probed combinations' rows. The
     * `IN (a, b, …)` serving shape: N combos cost one scan of their
     * distinct buckets, not N unioned plan branches each with its own
     * file listing ([[SecondaryIndex]]'s multi routes and the SQL RLI
@@ -1201,11 +1201,15 @@ object BucketTable {
         case (df, (c, v)) => df.withColumn(c, lit(v).cast(schema(c).dataType))
       }.drop("id")
     }.reduce(_.unionByName(_))
-    val (probeB, buckets) = checkpointRouted(withBucket(probe0, p))
-    val probe = probeB.drop(BucketCol)
-    val base = readBuckets(spark, tablePath, buckets).drop(BucketCol)
-    val cond = p.bucketBy.map(c => base(c) <=> probe(c)).reduce(_ && _)
-    base.join(broadcast(probe), cond, "left_semi")
+    val (_, buckets) = checkpointRouted(withBucket(probe0, p))
+    // the combinations are driver literals already: a null-safe filter
+    // keeps exactly their rows without a broadcast job
+    val cond = combos.map { vs =>
+      p.bucketBy.zip(vs).map { case (c, v) =>
+        col(c) <=> lit(v).cast(schema(c).dataType)
+      }.reduce(_ && _)
+    }.reduce(_ || _)
+    readBuckets(spark, tablePath, buckets).drop(BucketCol).filter(cond)
   }
 
   /** Rewrite ONLY `touched` buckets: read their current rows, apply

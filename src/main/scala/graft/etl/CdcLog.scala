@@ -164,8 +164,7 @@ object CdcLog {
   def stage(tablePath: String, seq: Long, rows: DataFrame): Unit = {
     val tmp = tmpPath(tablePath, seq)
     discard(tablePath, seq) // orphans from a crashed writer at this seq
-    rows.withColumn(SeqCol, lit(seq))
-      .write.mode("errorifexists").parquet(tmp.toString)
+    UnitSchema.write(rows.withColumn(SeqCol, lit(seq)), tmp.toString)
   }
 
   /** Stage a content-preserving commit (compact / cluster / rescale):
@@ -228,7 +227,7 @@ object CdcLog {
         "checkpoint the change head")
     val dirs = window.map(dirPath(tablePath, _))
       .filterNot(d => Files.exists(d.resolve(EmptyMarker)))
-    dirs.map(d => spark.read.parquet(d.toString))
+    dirs.map(d => UnitSchema.read(spark, d.toString))
       .reduceLeftOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(emptyFeedFrom(spark, tablePath, head))
   }
@@ -243,7 +242,7 @@ object CdcLog {
     val any = (head to math.max(0L, head - 64L) by -1L)
       .map(dirPath(tablePath, _))
       .find(d => Files.exists(d) && !Files.exists(d.resolve(EmptyMarker)))
-    any.map(d => spark.read.parquet(d.toString).limit(0)).getOrElse {
+    any.map(d => UnitSchema.read(spark, d.toString).limit(0)).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF(OpCol, SeqCol)
     }

@@ -47,6 +47,26 @@ object Fuse {
     (ck, aggs.indices.map(i => got(s"__fuse$i")))
   }
 
+  /** Run `write` over `df` observed by `aggs` and return the values,
+    * computed INSIDE the write job. A lost listener event recomputes
+    * them from `df` (one extra job, same values).
+    */
+  def writeObserved(df: DataFrame, aggs: Column*)(
+      write: DataFrame => Unit): IndexedSeq[Any] = {
+    if (aggs.isEmpty) { write(df); return IndexedSeq.empty }
+    val obs = Observation()
+    val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"__fuse$i") }
+    write(df.observe(obs, named.head, named.tail: _*))
+    try {
+      val got = Await.result(Future(obs.get), MetricWaitSec.seconds)
+      aggs.indices.map(i => got(s"__fuse$i"))
+    } catch {
+      case _: java.util.concurrent.TimeoutException =>
+        val r = df.agg(named.head, named.tail: _*).head()
+        aggs.indices.map(r.get)
+    }
+  }
+
   /** [[checkpointObserved]] with the one metric every commit gate
     * needs: the row count (an `isEmpty` that costs no extra job).
     */

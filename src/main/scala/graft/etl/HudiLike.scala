@@ -49,17 +49,25 @@ object HudiLike {
       .drop("__rn")
   }
 
+  /** The column [[upsert]]'s `prior` adds: a struct of the key's
+    * `prior` columns as the existing side held them, NULL for a key
+    * the existing side lacks.
+    */
+  val PriorCol = "__prior"
+
   /** Merge `incoming` into `existing` by `keys`: rows with a key present
     * in `incoming` are replaced (precombine latest-wins, incoming wins
     * ties), unmatched existing rows are kept, new keys are inserted.
-    * Pure function of its inputs — the write path is `commit`.
+    * Pure function of its inputs — the write path is `commit`. With
+    * `prior`, each output row also carries [[PriorCol]].
     */
   def upsert(
       existing: DataFrame,
       incoming: DataFrame,
       keys: Seq[String],
       precombine: String,
-      tieBreak: Seq[String] = Nil): DataFrame = {
+      tieBreak: Seq[String] = Nil,
+      prior: Seq[String] = Nil): DataFrame = {
     // schema evolution (the reference enables
     // `hoodie.schema.on.read.enable=true`, py:54): columns added by the
     // incoming batch are appended to the table schema with nulls for
@@ -73,10 +81,16 @@ object HudiLike {
     val ordering =
       (Seq(col(precombine).desc, col("__src").desc) ++ tieBreak.map(col(_).desc))
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
-    tagged
-      .withColumn("__rn", row_number().over(w))
+    val ranked = tagged.withColumn("__rn", row_number().over(w))
+    // same partitioning as `w`: the prior rides the merge's exchange
+    val withPrior =
+      if (prior.isEmpty) ranked
+      else ranked.withColumn(PriorCol,
+        first(when(col("__src") === 0, struct(prior.map(col): _*)),
+          ignoreNulls = true).over(Window.partitionBy(keys.map(col): _*)))
+    withPrior
       .filter(col("__rn") === 1)
-      .select(cols.map(col): _*)
+      .select((cols ++ prior.headOption.map(_ => PriorCol)).map(col): _*)
   }
 
   /** Partial-update merge — Hudi's `PartialUpdateAvroPayload`

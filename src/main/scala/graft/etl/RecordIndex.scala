@@ -34,7 +34,7 @@ import scala.jdk.CollectionConverters._
   * Correctness never depends on freshness: [[lookup]] validates the
   * resolved file against the table's live manifest and falls back to
   * [[BloomTable.lookup]] when the index is stale for that key — the
-  * same self-healing discipline as `BloomTable.reconcileIndex`.
+  * same self-healing discipline as `BloomTable.indexSnapshot`.
   */
 object RecordIndex {
 
@@ -97,7 +97,8 @@ object RecordIndex {
       rel: Seq[String], keys: Seq[String], nShards: Int): DataFrame = {
     val base = absBase(tablePath)
     val dfs = rel.groupBy(_.takeWhile(_ != '/')).values.map { fs =>
-      spark.read.parquet(fs.map(f => s"$base/$f").toSeq: _*)
+      val files = fs.map(f => s"$base/$f").toSeq
+      UnitSchema.read(spark, Paths.get(files.head).getParent.toString, files)
         .select((keys.map(col) :+ col("_metadata.file_path").as("__fp")): _*)
     }
     // relativize to the manifest's `c=N/part-*.parquet` form by suffix —
@@ -138,8 +139,8 @@ object RecordIndex {
     val staging = rliDir(tablePath).resolve(s".build${System.nanoTime()}")
     // one task per shard → one file per shard dir (the index stays
     // O(shards) files however parallel the scan was)
-    entries.repartition(col("__s"))
-      .write.partitionBy("__s").parquet(staging.toString)
+    UnitSchema.write(entries.repartition(col("__s")), staging.toString,
+      partitionBy = Seq("__s"))
     val built = moveShards(tablePath, staging, shardVersionsOrEmpty(tablePath))
     writeShardManifest(tablePath, built)
     writeCovered(tablePath, live.toSet)
@@ -161,6 +162,8 @@ object RecordIndex {
         .map(p => (p.getFileName.toString.drop(4).toInt, p)).toSeq
       finally s.close()
     }
+    // each shard dir is read as a unit of its own
+    UnitSchema.inherit(staging.toString, parts.map(_._2.toString))
     val moved = parts.map { case (shard, dir) =>
       val next = current.getOrElse(shard, -1L) + 1
       val dst = rliDir(tablePath).resolve(s"s=$shard").resolve(s"v=$next")
@@ -252,7 +255,7 @@ object RecordIndex {
     // wall time of this single-job shape at 16 shards.
     val cur = affected.flatMap { shard =>
       versions.get(shard).map(v =>
-        spark.read.parquet(
+        UnitSchema.read(spark,
           rliDir(tablePath).resolve(s"s=$shard").resolve(s"v=$v").toString)
           .withColumn("__s", lit(shard)))
     }.reduceOption(_.unionByName(_))
@@ -290,8 +293,8 @@ object RecordIndex {
       case None => Map.empty[Int, Long]
       case Some(m) =>
         val staging = rliDir(tablePath).resolve(s".refresh${System.nanoTime()}")
-        m.repartition(col("__s"))
-          .write.partitionBy("__s").parquet(staging.toString)
+        UnitSchema.write(m.repartition(col("__s")), staging.toString,
+          partitionBy = Seq("__s"))
         moveShards(tablePath, staging, versions)
           .filter { case (s, v) => affected.contains(s) && !versions.get(s).contains(v) }
     }
@@ -340,7 +343,7 @@ object RecordIndex {
     val fresh = coveredFiles(tablePath) == live
     val entry = versions.get(shard).toSeq.flatMap { v =>
       p.keys.zip(keyValues).foldLeft(
-        spark.read.parquet(
+        UnitSchema.read(spark,
           rliDir(tablePath).resolve(s"s=$shard").resolve(s"v=$v").toString)) {
         case (df, (k, kv)) => df.filter(col(k) === lit(kv).cast(schema(k).dataType))
       }.select("file").collect().map(_.getString(0)).toSeq
@@ -348,7 +351,8 @@ object RecordIndex {
     entry match {
       case Seq(file) if live(file) =>
         p.keys.zip(keyValues).foldLeft(
-          spark.read.parquet(s"${absBase(tablePath)}/$file")) {
+          UnitSchema.read(spark, Paths.get(s"${absBase(tablePath)}/$file")
+            .getParent.toString, Seq(s"${absBase(tablePath)}/$file"))) {
           case (df, (k, v)) => df.filter(col(k) === lit(v).cast(schema(k).dataType))
         }
       case Seq() if fresh =>

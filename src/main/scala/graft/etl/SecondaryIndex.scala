@@ -33,6 +33,9 @@ object SecondaryIndex {
   private val Live = "__live"
   private val Commit = "__commit"
 
+  /** The liveness column of an index delta (see [[applyDelta]]). */
+  private[etl] val LiveCol = Live
+
   // ---- covered-head bookkeeping (crash-loud serving) -----------------
   //
   // Every reconcile runs AFTER the primary's commit point (an index
@@ -240,13 +243,6 @@ object SecondaryIndex {
     setCoveredHeadLocked(indexPath, h)
   }
 
-  /** The heal's discrepancy frame — factored out of [[healLocked]] so
-    * plan tooling can dump it; carries no commit/lock side effects.
-    */
-  private[graft] def healDeltaForDump(spark: SparkSession, kind: String,
-      primaryPath: String, indexPath: String): DataFrame =
-    healDelta(spark, kind, primaryPath, indexPath)
-
   private def healDelta(spark: SparkSession, kind: String,
       primaryPath: String, indexPath: String): DataFrame = {
     // the index's own key columns ARE the mapping — (sec ++ keys) for a
@@ -392,10 +388,19 @@ object SecondaryIndex {
     // computes the diff exactly once (pre/post are checkpointed by
     // the caller, so no lineage rides in); an empty delta routes to
     // zero touched buckets and upsertInto commits nothing
+    applyDelta(spark, indexPath, sideDiff(pre, post))
+  }
+
+  /** Commit a mapping delta — `(sec cols…, key cols…, [[LiveCol]])`
+    * rows, dead mappings false — as ONE index upsert: the routed
+    * checkpoint plus the touched buckets' write.
+    */
+  def applyDelta(spark: SparkSession, indexPath: String,
+      delta: DataFrame): Unit = {
     val commit = BucketTable.manifest(indexPath).values.maxOption.getOrElse(-1L) + 1
     MaintProf.timed("idx.reconcile.upsert")(
       BucketTable.upsertInto(spark, indexPath,
-        sideDiff(pre, post).withColumn(Commit, lit(commit))))
+        delta.withColumn(Commit, lit(commit))))
     ()
   }
 
@@ -513,8 +518,9 @@ object SecondaryIndex {
   def lookupMultiBloom(spark: SparkSession, primaryPath: String,
       indexPath: String, combos: Seq[Seq[Any]]): DataFrame = {
     val p = BloomTable.props(primaryPath)
+    // lookupMany dedups the keys inside its probe checkpoint
     val keys = BucketTable.lookupCombos(spark, indexPath, combos)
-      .filter(col(Live)).select(p.keys.map(col): _*).distinct()
+      .filter(col(Live)).select(p.keys.map(col): _*)
     BloomTable.lookupMany(spark, primaryPath, keys)
   }
 

@@ -321,10 +321,11 @@ object SqlMerge {
             // index-composed route: ONE probed index bucket resolves
             // the victims' keys, the delete rewrites only their
             // candidate files — no discovery scan; the engine binding
-            // reconciles the served mappings in the same pass
+            // reconciles the served mappings in the same pass (the
+            // delete checkpoints the resolved keys itself)
             SecondaryIndex.ensureCurrent(spark, "bloom", path, idxPath)
             val keys = SecondaryIndex.lookupBloomKeys(
-              spark, path, idxPath, secValues).localCheckpoint()
+              spark, path, idxPath, secValues)
             BloomTable.deleteFrom(spark, path, keys)
             ()
           case None =>

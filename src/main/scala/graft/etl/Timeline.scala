@@ -387,8 +387,18 @@ object Timeline {
     ()
   }
 
+  /** Where an OCC attempt stages its snapshot before the in-lock
+    * rename to `v=N`.
+    */
+  private val StagedPrefix = "_staged-"
+
   /** Retention cleaning: drop all but the newest `retain` versions
-    * (never the latest). Returns the versions removed.
+    * (never the latest). Returns the versions removed. Also reclaims
+    * crashed OCC attempts' staged dirs — AGE-GATED like
+    * [[BloomTable.clean]]'s sweep: an in-flight writer sits between its
+    * stage write and its in-lock rename for at most the lock-acquire
+    * window, so only dirs older than [[FsLock.LockExpiryMs]] are
+    * provably debris.
     */
   def clean(tablePath: String, retain: Int): Seq[Long] =
     // table lock shared with [[purgeKey]]'s sweep and the commit
@@ -401,6 +411,13 @@ object Timeline {
       val pinned = pinnedVersions(tablePath)
       val drop = vs.dropRight(retain).filterNot(pinned)
       drop.foreach(v => FsUtil.deleteRecursively(Paths.get(tablePath, s"v=$v")))
+      val stagedCutoffMs = System.currentTimeMillis() - FsLock.LockExpiryMs
+      val s = Files.list(Paths.get(tablePath))
+      try s.iterator().asScala
+        .filter(d => d.getFileName.toString.startsWith(StagedPrefix) &&
+          Files.getLastModifiedTime(d).toMillis < stagedCutoffMs)
+        .foreach(FsUtil.deleteRecursively)
+      finally s.close()
       drop
     }
 
@@ -513,12 +530,14 @@ object Timeline {
         HudiLike.precombineLatest(incoming, keys, precombine, tieBreak)
     }
     Files.createDirectories(Paths.get(tablePath))
-    val staged = Files.createTempDirectory(Paths.get(tablePath), "_staged-")
-    UnitSchema.write(merged, staged.toString, mode = "overwrite")
-    // the staged snapshot is immutable: take the instant's row count
-    // from its footers NOW, so the critical section does no file
-    // reads at all — its cost must not scale with snapshot size
-    val stagedRows = UnitSchema.read(spark, staged.toString).count()
+    val staged = Files.createTempDirectory(Paths.get(tablePath), StagedPrefix)
+    // the instant's row count rides the staging write as an observed
+    // metric, so the critical section does no file reads at all — its
+    // cost must not scale with snapshot size
+    val stagedRows = Fuse.writeObserved(merged,
+      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))(
+      UnitSchema.write(_, staged.toString, mode = "overwrite"))
+      .head.asInstanceOf[Number].longValue()
     val committed = FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       if (latestVersion(tablePath) != base) None
       else {

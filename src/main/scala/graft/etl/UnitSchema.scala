@@ -51,6 +51,13 @@ object UnitSchema {
     ()
   }
 
+  /** Record `unit`'s schema in each of `parts` — the partition dirs of
+    * a `partitionBy` write that move out to be read as units of their
+    * own.
+    */
+  def inherit(unit: String, parts: Seq[String]): Unit =
+    recorded(unit).foreach(s => parts.foreach(record(_, s)))
+
   /** The unit's recorded data schema; None for a unit written before
     * recording existed.
     */

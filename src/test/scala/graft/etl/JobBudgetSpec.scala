@@ -135,11 +135,20 @@ class JobBudgetSpec extends SparkSpec {
     SqlIndex.exec(spark,
       s"CREATE INDEX budget_sec ON $t USING SECONDARY (user_id)").collect()
     check("bloom", Seq(
-      ("merge", 18, () => merge(t)),
-      ("delete", 22, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
-      ("key select", 4, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
-      ("secondary select", 10, () => assert(
+      ("merge", 10, () => merge(t)),
+      ("delete", 11, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
+      ("key select", 2, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
+      ("secondary select", 4, () => assert(
         select(s"SELECT $Cols FROM $t WHERE user_id = 12") > 0))))
+  }
+
+  test("bloom with CDC: MERGE and its change feed read no footer schemas") {
+    val t = create("bloom", "budget_bloom_cdc")
+    SqlCall.exec(spark, s"CALL enable_cdc('$t')").collect()
+    check("bloom cdc", Seq(
+      ("merge", 11, () => merge(t)),
+      ("change feed", 1, () => assert(SqlCall.exec(spark,
+        s"CALL table_changes('$t', 1, 'cdc')").collect().length == 200))))
   }
 
   test("partitioned: MERGE, DELETE and key reads within budget") {

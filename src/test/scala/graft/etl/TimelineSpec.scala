@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class TimelineSpec extends SparkSpec {
   import spark.implicits._
@@ -95,6 +96,41 @@ class TimelineSpec extends SparkSpec {
     val latest = Timeline.read(spark, dir).as[(String, Long, Double)]
       .collect().sortBy(_._1)
     assert(latest.toSeq == Seq(("a", 1L, 1.0), ("b", 1L, 2.0), ("c", 1L, 3.0)))
+  }
+
+  test("OCC instants count the staged rows; clean reclaims crashed staged dirs only") {
+    val dir = Files.createTempDirectory("occclean").toString + "/t"
+    rows(("a", 1L, 1.0)).createOrReplaceTempView("occ_clean_src")
+    SqlDdl.exec(spark, s"""CREATE TABLE occ_clean_tl TBLPROPERTIES (
+      |  'graft.table.layout' = 'timeline', 'graft.table.path' = '$dir',
+      |  'graft.table.primaryKey' = 'k', 'graft.table.preCombineField' = 'pc')
+      |AS SELECT k, pc, v FROM occ_clean_src""".stripMargin)
+    assert(Timeline.attemptOcc(spark, dir, rows(("b", 1L, 2.0), ("c", 1L, 3.0)),
+      Seq("k"), "pc", Nil, base = Some(0L)).contains(1L))
+    assert(Timeline.instants(dir).find(_.version == 1L).map(_.n_rows).contains(3L))
+    // a CRASHED attempt's staged dir (mtime past the lock-expiry
+    // window) is debris; a FRESH one is an in-flight writer between its
+    // stage write and its in-lock rename, and must survive (the age gate)
+    def staged(): Seq[String] = {
+      val s = Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_staged-")).toSeq.sorted
+      finally s.close()
+    }
+    assert(staged().isEmpty)
+    def crash(name: String) = Files.setLastModifiedTime(
+      Files.createDirectories(java.nio.file.Paths.get(dir, name)),
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - FsLock.LockExpiryMs - 60000L))
+    crash("_staged-1")
+    Files.createDirectories(java.nio.file.Paths.get(dir, "_staged-2"))
+    assert(Timeline.clean(dir, retain = 2).isEmpty)
+    assert(staged() == Seq("_staged-2"))
+    // the SQL verb runs the same sweep
+    crash("_staged-3")
+    SqlCall.exec(spark, "CALL clean_commits('occ_clean_tl', 2)").collect()
+    assert(staged() == Seq("_staged-2"))
+    assert(Timeline.read(spark, dir).count() == 3)
   }
 
   test("concurrent OCC writers both commit without lost updates") {
