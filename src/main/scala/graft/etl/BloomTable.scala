@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{CreateStruct, In, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -460,8 +460,47 @@ object BloomTable {
   private def currentIndexVersion(tablePath: String): Long =
     Files.readString(indexLatest(tablePath)).trim.toLong
 
-  private def readIndex(spark: SparkSession, tablePath: String): DataFrame =
-    UnitSchema.read(spark, s"$tablePath/_index/v=${currentIndexVersion(tablePath)}")
+  private def indexDir(tablePath: String, v: Long): String = s"$tablePath/_index/v=$v"
+
+  /** The rows of one index version on the driver. `id` names the
+    * version and its data files — Spark names every write's files
+    * uniquely — so it identifies the version's content.
+    */
+  private final case class IndexVersion(id: Seq[String], rows: Seq[Row],
+      schema: StructType)
+
+  private def indexVersionId(tablePath: String, v: Long): Seq[String] =
+    s"v=$v" +: listParquet(Paths.get(indexDir(tablePath, v))).map(_.getFileName.toString)
+
+  /** Per table, the index version this driver last wrote or read, held
+    * softly (the collector drops it under memory pressure). A version
+    * never changes once written, so a statement on an index this driver
+    * already holds reads no index file and runs no Spark job for it.
+    */
+  private val lastIndex = new java.util.concurrent.ConcurrentHashMap[
+    String, java.lang.ref.SoftReference[IndexVersion]]
+
+  private def tableKey(tablePath: String): String =
+    Paths.get(tablePath).toAbsolutePath.normalize.toString
+
+  private def remember(tablePath: String, iv: IndexVersion): IndexVersion = {
+    lastIndex.put(tableKey(tablePath), new java.lang.ref.SoftReference(iv))
+    iv
+  }
+
+  /** The current index version's rows: the held ones when their id
+    * still matches the version on disk, else one read.
+    */
+  private def currentIndex(spark: SparkSession, tablePath: String): IndexVersion = {
+    val v = currentIndexVersion(tablePath)
+    val id = indexVersionId(tablePath, v)
+    Option(lastIndex.get(tableKey(tablePath))).flatMap(r => Option(r.get))
+      .filter(_.id == id)
+      .getOrElse {
+        val idx = UnitSchema.read(spark, indexDir(tablePath, v))
+        remember(tablePath, IndexVersion(id, idx.collect().toSeq, idx.schema))
+      }
+  }
 
   /** Next index version that cannot collide with debris: a writer that
     * died after the `v=` dir write but before the pointer swap leaves
@@ -483,12 +522,20 @@ object BloomTable {
 
   private def writeIndex(tablePath: String, rows: DataFrame, v: Long): Unit = {
     Files.createDirectories(Paths.get(tablePath, "_index"))
-    UnitSchema.write(rows.coalesce(1), s"$tablePath/_index/v=$v")
+    // the written rows ride the write job back: the next statement's
+    // snapshot (O(files) rows, what it would read anyway)
+    val Seq(written) = Fuse.writeObserved(rows.coalesce(1),
+      collect_list(struct(rows.columns.map(col): _*)))(
+      UnitSchema.write(_, indexDir(tablePath, v)))
     val tmp = Paths.get(tablePath, "_index", s"_latest.tmp${System.nanoTime()}")
     Files.writeString(tmp, v.toString,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     Files.move(tmp, indexLatest(tablePath), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    remember(tablePath, IndexVersion(indexVersionId(tablePath, v),
+      written.asInstanceOf[scala.collection.Seq[Row]].toSeq,
+      UnitSchema.recorded(indexDir(tablePath, v)).getOrElse(rows.schema)))
+    ()
   }
 
   /** The data files of a unit dir, sorted. */
@@ -570,28 +617,36 @@ object BloomTable {
   private def rangeClustered(df: DataFrame, p: Props, files: Int): DataFrame =
     df.repartitionByRange(math.max(1, files), col(p.keys.head))
 
-  /** `df` plus a boolean `flag`: whether the row's key is in `set`,
-    * distinct key rows of type `keyType` a statement observed. Keys
-    * with a NULL part are left out (an equi-join never matches them).
-    * Up to [[InListMax]] keys the test is a literal `IN` (no join, no
-    * broadcast job); past that it is a broadcast join against the keys
-    * as a local relation, so the plan stays O(1) — the [[filesIn]]
-    * policy for key sets.
+  /** Observed with a statement's key rows: up to [[InListMax]] of
+    * them (a bounded top-k, so the driver never receives more), which
+    * are all of them when the statement has at most that many.
     */
-  private def withKeyFlag(spark: SparkSession, df: DataFrame, keys: Seq[String],
-      set: Iterable[Any], keyType: StructType, flag: String): DataFrame = {
-    val rows = set.map(_.asInstanceOf[Row]).filterNot(_.toSeq.contains(null)).toSeq
-    if (rows.sizeIs <= InListMax) df.withColumn(flag,
-      if (rows.isEmpty) lit(false)
-      else org.apache.spark.sql.graftbridge.Bridge.column(In(
-        CreateStruct(keys.map(UnresolvedAttribute.quoted)),
-        rows.map(Literal.create(_, keyType)))))
-    else df.join(broadcast(spark.createDataFrame(rows.asJava, keyType)
-        .withColumn(flag, lit(true))), keys, "left")
-      .select(df.columns.map(col) :+ coalesce(col(flag), lit(false)).as(flag): _*)
-  }
+  private def keySample(keys: Seq[String]): Column =
+    org.apache.spark.sql.graftbridge.Bridge.collectTopK(
+      CreateStruct(keys.map(UnresolvedAttribute.quoted)), InListMax)
 
-  private def keyStruct(keys: Seq[String]): Column = struct(keys.map(col): _*)
+  /** The rows of `df` whose key is (`in`) or is not among a statement's
+    * `keyN` key rows `keyRel`, of which `sample` is the [[keySample]].
+    * When the sample holds them all the test is a literal `IN` (no
+    * join, no job); past [[InListMax]] it is a semi/anti join against
+    * `keyRel` itself, so the key set never has to reach the driver —
+    * the [[filesIn]] policy for key sets. Keys with a NULL part never
+    * match, as in an equi-join.
+    */
+  private def byKeys(df: DataFrame, keys: Seq[String], keyRel: DataFrame,
+      keyN: Long, sample: Any, in: Boolean): DataFrame =
+    if (keyN > InListMax) df.join(keyRel, keys, if (in) "left_semi" else "left_anti")
+    else {
+      val keyType = StructType(keys.map(k => keyRel.schema(k)))
+      val rows = sample.asInstanceOf[scala.collection.Seq[Row]]
+        .filterNot(_.toSeq.contains(null)).distinct
+      val test =
+        if (rows.isEmpty) lit(false)
+        else org.apache.spark.sql.graftbridge.Bridge.column(In(
+          CreateStruct(keys.map(UnresolvedAttribute.quoted)),
+          rows.map(Literal.create(_, keyType)).toSeq))
+      df.filter(if (in) test else !test)
+    }
 
   private def nextCommit(tablePath: String): Long = {
     val live = manifest(tablePath).flatMap(f =>
@@ -794,8 +849,8 @@ object BloomTable {
       p: Props): IndexSnapshot = {
     val live = absFiles(tablePath, manifest(tablePath))
     val liveSet = live.toSet
-    val idx = readIndex(spark, tablePath)
-    val indexed = idx.collect().toSeq.filter(r => liveSet(r.getAs[String]("file")))
+    val idx = currentIndex(spark, tablePath)
+    val indexed = idx.rows.filter(r => liveSet(r.getAs[String]("file")))
     val have = indexed.map(_.getAs[String]("file")).toSet
     val missing = live.filterNot(have)
     if (missing.isEmpty) IndexSnapshot(indexed, idx.schema, tablePath)
@@ -944,10 +999,11 @@ object BloomTable {
     val p = props(tablePath)
     val snap = indexSnapshot(spark, tablePath, p)
     // the emptiness gate and the candidate files ride the batch
-    // checkpoint as observed metrics. Validators judge the precombined batch (a superseded duplicate
-    // cannot veto); without them the merge's own window resolves
-    // duplicate batch keys — one window over table and batch orders
-    // rows exactly as precombine-then-merge does
+    // checkpoint as observed metrics. Validators judge the precombined
+    // batch (a superseded duplicate cannot veto); without them the
+    // merge's own window resolves duplicate batch keys — one window
+    // over table and batch orders rows exactly as precombine-then-merge
+    // does
     val (batch, batchN, touched, _) = checkpointTagged(
       if (validators.isEmpty) incoming
       else HudiLike.precombineLatest(incoming, p.keys, p.precombine, p.tieBreak),
@@ -962,21 +1018,17 @@ object BloomTable {
       else readFiles(spark, tablePath, touched)
     val bound = boundSecondaryIndexes(tablePath)
     // each row of the merge carries its key's prior secondary values,
-    // so the write job itself observes every mapping the batch moved
+    // so the index delta is a filter of the merge (see movedDelta)
     val merged = HudiLike.upsert(existing, batch, p.keys, p.precombine,
       p.tieBreak, prior = bound.flatMap(_._1).distinct)
+    val rows = merged.drop(HudiLike.PriorCol)
     // file budget for the rewritten region: keep the region's file
     // count (+1 when pure append) so file sizes stay level without a
     // table-wide count() job; compact() re-levels the whole table
-    // observed after the range exchange, so the sampler's pass over
-    // the merge does not count
-    val moved = Fuse.writeObserved(
-      rangeClustered(merged, p, math.max(1, touched.size)),
-      bound.map(b => movedMappings(b._1, p.keys)): _*)(o =>
-      UnitSchema.write(o.drop(HudiLike.PriorCol), s"$tablePath/c=$commit"))
-    val written = listCommitFiles(tablePath, commit)
+    val written = writeCommit(rows, tablePath, commit, p,
+      math.max(1, touched.size))
     val newManifest = (manifest(tablePath).toSet -- touched) ++ written
-    writeSchema(tablePath, merged.drop(HudiLike.PriorCol))
+    writeSchema(tablePath, rows)
     // an upsert can only change the BATCH's keys: the region's other
     // rows are copied byte-equal into the new files and would diff to
     // filtered-out no-ops — restrict both diff sides to the batch keys
@@ -993,52 +1045,34 @@ object BloomTable {
     writeIndex(tablePath,
       nextIndexRows(spark, tablePath, snap, touched, written, p),
       nextIndexVersion(tablePath))
-    maintainBound(spark, bound, commit) { (secCols, i) =>
-      Some(moved(i).asInstanceOf[scala.collection.Seq[Row]]).filter(_.nonEmpty)
-        .map(movedDelta(spark, merged.schema, secCols, p.keys, _))
-    }
+    maintainBound(spark, bound, commit)((secCols, _) =>
+      Some(movedDelta(merged, secCols, p.keys)))
     touched
   }
 
-  /** Observed over a merge that carries [[HudiLike.PriorCol]]: one
-    * `(pre, post, key)` struct per row whose `secCols` mapping the
-    * merge moved — `pre` NULL for a new key. Rows of keys outside the
-    * batch keep their prior values and are never collected, so the
-    * list the driver receives is O(batch).
+  /** The index delta of a merge that carries [[HudiLike.PriorCol]]:
+    * for each row whose `secCols` mapping the merge moved, the prior
+    * mapping flips dead (none for a new key) and the new one upserts
+    * live — the [[SecondaryIndex.sideDiff]] shape. Rows of keys outside
+    * the batch keep their prior values and drop out. The index's routed
+    * checkpoint evaluates it on the executors; the key columns pass
+    * through untouched, so the merge's partitioning by key already
+    * clusters the index's precombine and it needs no exchange.
     */
-  private def movedMappings(secCols: Seq[String], keys: Seq[String]): Column = {
+  private def movedDelta(merged: DataFrame, secCols: Seq[String],
+      keys: Seq[String]): DataFrame = {
     val prior = col(HudiLike.PriorCol)
-    val pre = when(prior.isNotNull,
-      struct(secCols.map(c => prior.getField(c).as(c)): _*))
+    val pre = struct(secCols.map(c => prior.getField(c).as(c)): _*)
     val post = struct(secCols.map(col): _*)
-    collect_list(when(prior.isNull || !(pre <=> post),
-      struct(pre.as("pre"), post.as("post"), struct(keys.map(col): _*).as("k"))))
-  }
-
-  /** The index delta of [[movedMappings]]' rows: the pre mapping flips
-    * dead, the post mapping upserts live (the [[SecondaryIndex.sideDiff]]
-    * shape).
-    */
-  private def movedDelta(spark: SparkSession, schema: StructType,
-      secCols: Seq[String], keys: Seq[String],
-      moved: scala.collection.Seq[Row]): DataFrame =
-    localDelta(spark, schema, secCols, keys, moved.flatMap { m =>
-      val k = m.getStruct(2).toSeq
-      Option(m.getStruct(0)).map(pre => Row.fromSeq(pre.toSeq ++ k :+ false)).toSeq :+
-        Row.fromSeq(m.getStruct(1).toSeq ++ k :+ true)
-    })
-
-  /** Mapping-delta rows `(sec…, key…, live)` observed on the driver as
-    * an index delta frame, typed from the table's `schema`. One
-    * partition: the rows are on the driver already, and the index
-    * upsert's precombine then needs no shuffle.
-    */
-  private def localDelta(spark: SparkSession, schema: StructType,
-      secCols: Seq[String], keys: Seq[String],
-      rows: scala.collection.Seq[Row]): DataFrame = {
-    val out = StructType((secCols ++ keys).map(c => schema(c).copy(nullable = true)) :+
-      StructField(SecondaryIndex.LiveCol, BooleanType))
-    spark.createDataFrame(rows.asJava, out).coalesce(1)
+    def side(sec: Column, live: Boolean): Column =
+      struct(secCols.map(c => sec.getField(c).as(c)) :+
+        lit(live).as(SecondaryIndex.LiveCol): _*)
+    merged.filter(prior.isNull || !(pre <=> post))
+      .select(keys.map(col) :+ explode(filter(
+        array(when(prior.isNotNull, side(pre, live = false)), side(post, live = true)),
+        _.isNotNull)).as("m"): _*)
+      .select(secCols.map(c => col("m").getField(c).as(c)) ++ keys.map(col) :+
+        col("m").getField(SecondaryIndex.LiveCol).as(SecondaryIndex.LiveCol): _*)
   }
 
   /** One FILE-level optimistic-concurrency attempt against the `m0`
@@ -1106,6 +1140,9 @@ object BloomTable {
     // one-row-per-file metadata transformation, never a re-scan
     val stagedIdx = indexRows(stagedContent, p).localCheckpoint()
     val stagedSeg = "/" + staged.getFileName.toString + "/"
+    // the staged dir's age is what clean's debris sweep reads: it is
+    // fresh from here for as long as this writer may queue for the lock
+    FsUtil.touch(staged)
     val outcome = FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       val scans0 = dataScans.sum()
       try {
@@ -1121,7 +1158,8 @@ object BloomTable {
         lazy val addConflict = addedSince.nonEmpty &&
           checkpointTagged(batch, snap1.filter(
             absFiles(tablePath, addedSince), keep = true), p)._3.nonEmpty
-        if (readConflict || addConflict) None
+        // a staged dir swept as debris cannot commit: the attempt retries
+        if (readConflict || addConflict || !Files.isDirectory(staged)) None
         else {
           val commit = nextCommit(tablePath)
           Files.move(staged, Paths.get(tablePath, s"c=$commit"),
@@ -1196,55 +1234,42 @@ object BloomTable {
       keysToDelete: DataFrame): Seq[String] = {
     val p = props(tablePath)
     val snap = indexSnapshot(spark, tablePath, p)
-    // the distinct keys come back as an observed set with the tag —
-    // no dedup shuffle, and a short key set flags victims without a join
-    val (keyRel, keyN, touched, Seq(keySet)) = checkpointTagged(
-      keysToDelete.select(p.keys.map(col): _*), snap, p, collect_set(keyStruct(p.keys)))
+    // the key sample rides the tag: a short key set splits the region
+    // with a literal IN, a long one joins the checkpointed keys
+    val (keyRel, keyN, touched, Seq(sample)) = checkpointTagged(
+      keysToDelete.select(p.keys.map(col): _*), snap, p, keySample(p.keys))
     if (keyN == 0L || touched.isEmpty) return Seq.empty
     val existing = readFiles(spark, tablePath, touched)
     val bound = boundSecondaryIndexes(tablePath)
-    val victim = "__victim"
-    val flagged = withKeyFlag(spark, existing, p.keys,
-      keySet.asInstanceOf[scala.collection.Seq[Any]],
-      StructType(p.keys.map(k => keyRel.schema(k))), victim)
-    val remaining = flagged.filter(!col(victim)).drop(victim)
+    val victims = byKeys(existing, p.keys, keyRel, keyN, sample, in = true)
+    val remaining = byKeys(existing, p.keys, keyRel, keyN, sample, in = false)
     val commit = nextCommit(tablePath)
-    // the write job observes the survivor count and every victim's
-    // mappings (the range sampler re-reads its input, so values may
-    // arrive twice: only the count's sign and the distinct mappings
-    // are used)
-    val obs = Fuse.writeObserved(flagged, (count(when(!col(victim), 1)) +:
-      bound.map { case (secCols, _) =>
-        collect_set(when(col(victim), struct((secCols ++ p.keys).map(col): _*)))
-      }): _*)(o => UnitSchema.write(rangeClustered(
-        o.filter(!col(victim)).drop(victim), p, touched.size), s"$tablePath/c=$commit"))
+    // the write job observes the survivor count (the range sampler
+    // re-reads its input, so only the count's sign is used)
+    val Seq(survivors) = Fuse.writeObserved(remaining, count(lit(1)))(o =>
+      UnitSchema.write(rangeClustered(o, p, touched.size), s"$tablePath/c=$commit"))
     // the whole candidate region may empty out — then the commit is
     // pure retirement: no new files, just the manifest shrinking
     val written =
-      if (obs.head.asInstanceOf[Number].longValue() > 0L) listCommitFiles(tablePath, commit)
+      if (survivors.asInstanceOf[Number].longValue() > 0L) listCommitFiles(tablePath, commit)
       else { FsUtil.deleteRecursively(Paths.get(tablePath, s"c=$commit")); Seq.empty }
     writeSchema(tablePath, remaining)
     // a delete only changes the VICTIM keys: survivors are copied
     // byte-equal and would diff to no-ops — the before side restricts
     // to the victims (whose after side is by construction empty), so
-    // the cdc join and the reconcile aggregate O(victims) rows, not
+    // the cdc join and the index delta aggregate O(victims) rows, not
     // O(region) (guide §2.3)
     writeManifest(tablePath,
       ((manifest(tablePath).toSet -- touched) ++ written).toSeq,
       commit, "delete",
-      CdcLog.Action.Changes { () =>
-        val victims = existing.join(broadcast(keyRel), p.keys, "leftsemi")
-        CdcLog.diff(victims, victims.limit(0), p.keys)
-      })
+      CdcLog.Action.Changes(() => CdcLog.diff(victims, victims.limit(0), p.keys)))
     writeIndex(tablePath,
       nextIndexRows(spark, tablePath, snap, touched, written, p),
       nextIndexVersion(tablePath))
     // every victim's mapping flips dead
-    maintainBound(spark, bound, commit) { (secCols, i) =>
-      val dead = obs(i + 1).asInstanceOf[scala.collection.Seq[Row]]
-      Option.when(dead.nonEmpty)(localDelta(spark, existing.schema, secCols,
-        p.keys, dead.map(r => Row.fromSeq(r.toSeq :+ false))))
-    }
+    maintainBound(spark, bound, commit)((secCols, _) =>
+      Some(victims.select((secCols ++ p.keys).map(col) :+
+        lit(false).as(SecondaryIndex.LiveCol): _*)))
     touched
   }
 
@@ -1352,23 +1377,21 @@ object BloomTable {
   }
 
   /** Multi-key point lookup: tag ALL requested keys to their candidate
-    * files in one index probe, read only those files, semi-join back to
-    * the requested keys — O(candidate files), never the table (the
+    * files in one index probe, read only those files, keep only the
+    * requested keys — O(candidate files), never the table (the
     * [[SecondaryIndex]] second hop and the reconcile pre-probe).
     */
   def lookupMany(spark: SparkSession, tablePath: String,
       keyRows: DataFrame): DataFrame = {
     val p = props(tablePath)
-    val keys = keyRows.select(p.keys.map(col): _*)
-    // the key dedup rides the probe's checkpoint too: the distinct
-    // keys come back to the driver as an observed set and filter the
-    // fetch
-    val (_, _, candidates, Seq(wanted)) = checkpointTagged(keys,
-      indexSnapshot(spark, tablePath, p), p, collect_set(keyStruct(p.keys)))
+    // the key sample rides the probe's checkpoint: a short key set
+    // filters the fetch with a literal IN, a long one joins the keys
+    val (keyRel, keyN, candidates, Seq(sample)) = checkpointTagged(
+      keyRows.select(p.keys.map(col): _*), indexSnapshot(spark, tablePath, p), p,
+      keySample(p.keys))
     if (candidates.isEmpty) read(spark, tablePath).limit(0)
-    else withKeyFlag(spark, readFiles(spark, tablePath, candidates), p.keys,
-      wanted.asInstanceOf[scala.collection.Seq[Any]], keys.schema, "__wanted")
-      .filter(col("__wanted")).drop("__wanted")
+    else byKeys(readFiles(spark, tablePath, candidates), p.keys, keyRel, keyN,
+      sample, in = true)
   }
 
   // ---- bound secondary index (see SecondaryIndex.createBloom) --------
@@ -1710,16 +1733,9 @@ object BloomTable {
       finally s.close()
     }
     // crashed OCC attempts' staged dirs (never referenced by any
-    // manifest — the in-lock rename is what publishes them).
-    // AGE-GATED: an in-flight writer sits between its stage write and
-    // its in-lock ATOMIC_MOVE for at most the lock-acquire window, so
-    // only dirs older than [[FsLock.LockExpiryMs]] are provably
-    // crashed debris — sweeping younger ones would yank a live
-    // writer's staged snapshot out from under its rename.
-    val stagedCutoffMs = System.currentTimeMillis() - FsLock.LockExpiryMs
-    val removedStaged = listDir(base)
-      .filter(_.getFileName.toString.startsWith("_staged-occ"))
-      .filter(d => Files.getLastModifiedTime(d).toMillis < stagedCutoffMs)
+    // manifest — the in-lock rename is what publishes them), age-gated
+    // so a live writer's staged snapshot survives (FsUtil.staleDirs)
+    val removedStaged = FsUtil.staleDirs(base, "_staged-occ")
       .map { d => FsUtil.deleteRecursively(d); d.getFileName.toString }
     removedData ++ removedIdx ++ removedStaged
   }

@@ -31,40 +31,36 @@ object Fuse {
     * computed INSIDE the checkpoint job. Returns the checkpointed
     * frame and the aggregate values in call order.
     */
-  def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, IndexedSeq[Any]) = {
-    val obs = Observation()
-    val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"__fuse$i") }
-    val ck = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
-    val got =
-      try Await.result(Future(obs.get), MetricWaitSec.seconds)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          // listener event lost — recompute from the checkpointed
-          // blocks (one extra job, same values)
-          val r = ck.agg(named.head, named.tail: _*).head()
-          return (ck, aggs.indices.map(r.get))
-      }
-    (ck, aggs.indices.map(i => got(s"__fuse$i")))
-  }
+  def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, IndexedSeq[Any]) =
+    observed(df, aggs)(_.localCheckpoint())
 
   /** Run `write` over `df` observed by `aggs` and return the values,
-    * computed INSIDE the write job. A lost listener event recomputes
-    * them from `df` (one extra job, same values).
+    * computed INSIDE the write job.
     */
   def writeObserved(df: DataFrame, aggs: Column*)(
-      write: DataFrame => Unit): IndexedSeq[Any] = {
-    if (aggs.isEmpty) { write(df); return IndexedSeq.empty }
+      write: DataFrame => Unit): IndexedSeq[Any] =
+    observed(df, aggs)(write)._2
+
+  /** Run `action` over `df` observed by `aggs`: the action's result and
+    * the aggregate values in call order. A lost listener event
+    * recomputes the values from `df` (one extra job, same values).
+    */
+  private def observed[T](df: DataFrame, aggs: Seq[Column])(
+      action: DataFrame => T): (T, IndexedSeq[Any]) = {
+    if (aggs.isEmpty) return (action(df), IndexedSeq.empty)
     val obs = Observation()
     val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"__fuse$i") }
-    write(df.observe(obs, named.head, named.tail: _*))
-    try {
-      val got = Await.result(Future(obs.get), MetricWaitSec.seconds)
-      aggs.indices.map(i => got(s"__fuse$i"))
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        val r = df.agg(named.head, named.tail: _*).head()
-        aggs.indices.map(r.get)
-    }
+    val out = action(df.observe(obs, named.head, named.tail: _*))
+    val got =
+      try {
+        val m = Await.result(Future(obs.get), MetricWaitSec.seconds)
+        aggs.indices.map(i => m(s"__fuse$i"))
+      } catch {
+        case _: java.util.concurrent.TimeoutException =>
+          val r = df.agg(named.head, named.tail: _*).head()
+          aggs.indices.map(r.get)
+      }
+    (out, got)
   }
 
   /** [[checkpointObserved]] with the one metric every commit gate

@@ -394,11 +394,8 @@ object Timeline {
 
   /** Retention cleaning: drop all but the newest `retain` versions
     * (never the latest). Returns the versions removed. Also reclaims
-    * crashed OCC attempts' staged dirs — AGE-GATED like
-    * [[BloomTable.clean]]'s sweep: an in-flight writer sits between its
-    * stage write and its in-lock rename for at most the lock-acquire
-    * window, so only dirs older than [[FsLock.LockExpiryMs]] are
-    * provably debris.
+    * crashed OCC attempts' staged dirs, age-gated like
+    * [[BloomTable.clean]]'s sweep ([[FsUtil.staleDirs]]).
     */
   def clean(tablePath: String, retain: Int): Seq[Long] =
     // table lock shared with [[purgeKey]]'s sweep and the commit
@@ -411,13 +408,8 @@ object Timeline {
       val pinned = pinnedVersions(tablePath)
       val drop = vs.dropRight(retain).filterNot(pinned)
       drop.foreach(v => FsUtil.deleteRecursively(Paths.get(tablePath, s"v=$v")))
-      val stagedCutoffMs = System.currentTimeMillis() - FsLock.LockExpiryMs
-      val s = Files.list(Paths.get(tablePath))
-      try s.iterator().asScala
-        .filter(d => d.getFileName.toString.startsWith(StagedPrefix) &&
-          Files.getLastModifiedTime(d).toMillis < stagedCutoffMs)
+      FsUtil.staleDirs(Paths.get(tablePath), StagedPrefix)
         .foreach(FsUtil.deleteRecursively)
-      finally s.close()
       drop
     }
 
@@ -538,8 +530,12 @@ object Timeline {
       org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))(
       UnitSchema.write(_, staged.toString, mode = "overwrite"))
       .head.asInstanceOf[Number].longValue()
+    // clean's debris sweep reads the staged dir's age: fresh from here
+    // for as long as this writer may queue for the lock
+    FsUtil.touch(staged)
     val committed = FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
-      if (latestVersion(tablePath) != base) None
+      // a staged dir swept as debris cannot commit: the attempt retries
+      if (latestVersion(tablePath) != base || !Files.isDirectory(staged)) None
       else {
         val next = base.getOrElse(-1L) + 1
         Files.move(staged, Paths.get(tablePath, s"v=$next"),

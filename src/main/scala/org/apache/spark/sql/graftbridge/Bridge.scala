@@ -24,6 +24,14 @@ object Bridge {
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** The aggregate keeping the `num` smallest values of `e`: a
+    * collect whose buffer is bounded.
+    */
+  def collectTopK(e: org.apache.spark.sql.catalyst.expressions.Expression,
+      num: Int): org.apache.spark.sql.Column =
+    column(new org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK(
+      e, num, false, 0, 0).toAggregateExpression())
+
   /** Block until the shared listener bus has delivered all queued
     * events — `QueryExecutionListener` callbacks are asynchronous, so a
     * test asserting over captured plans must drain the bus first

@@ -466,7 +466,7 @@ class BloomTableSpec extends SparkSpec {
     assert(imgs == Set(("u", 1L), ("i", 2000L)),
       s"unexpected CDC images: $imgs")
     // conflicted attempts remove their own staged dirs; a CRASHED
-    // writer's dir (mtime past the lock-expiry window) is debris the
+    // writer's dir (mtime past the lock queue wait) is debris the
     // clean sweep reclaims — but a FRESH dir is an IN-FLIGHT writer
     // between its stage write and its in-lock rename, and clean must
     // leave it alone (the age gate)
@@ -477,7 +477,7 @@ class BloomTableSpec extends SparkSpec {
       java.nio.file.Paths.get(path, "_staged-occ99"))
     java.nio.file.Files.setLastModifiedTime(crashed,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - FsLock.LockExpiryMs - 60000L))
+        System.currentTimeMillis() - FsLock.QueueWaitMs - 60000L))
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(path, "_staged-occ100"))
     BloomTable.clean(path)

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
@@ -18,15 +18,19 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 class JobBudgetSpec extends SparkSpec {
 
-  private final case class Cost(jobs: Int, schemaJobs: Int, showProps: Int)
+  private final case class Cost(jobs: Int, schemaJobs: Int, showProps: Int,
+      maxTaskResult: Long = 0L)
 
   private final class Probe(group: String) extends SparkListener {
     val jobs = new AtomicInteger
     val schemaJobs = new AtomicInteger
     val showProps = new AtomicInteger
+    private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val maxTaskResult = new java.util.concurrent.atomic.AtomicLong
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val p = Option(e.properties)
       if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+        e.stageIds.foreach(stages.add)
         jobs.incrementAndGet()
         if (p.forall(_.getProperty("spark.sql.execution.id") == null) &&
             e.stageInfos.size == 1 &&
@@ -34,6 +38,11 @@ class JobBudgetSpec extends SparkSpec {
           schemaJobs.incrementAndGet()
       }
     }
+    /** Bytes a task sent the driver: its result, accumulator updates
+      * (observed metrics among them) included. */
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (stages.contains(e.stageId) && e.taskMetrics != null)
+        maxTaskResult.accumulateAndGet(e.taskMetrics.resultSize, math.max)
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart
           if s.physicalPlanDescription.contains("ShowTableProperties") =>
@@ -57,7 +66,8 @@ class JobBudgetSpec extends SparkSpec {
       try body finally spark.sparkContext.clearJobGroup()
       drain()
     } finally spark.sparkContext.removeSparkListener(probe)
-    Cost(probe.jobs.get, probe.schemaJobs.get, probe.showProps.get)
+    Cost(probe.jobs.get, probe.schemaJobs.get, probe.showProps.get,
+      probe.maxTaskResult.get)
   }
 
   private val Cols = "event_id, user_id, event_type, value, day, rev"
@@ -106,7 +116,8 @@ class JobBudgetSpec extends SparkSpec {
   /** The statements of one layout, each with the cost it must have. */
   private def check(layout: String,
       statements: Seq[(String, Int, () => Unit)]): Unit = {
-    val costs = statements.map { case (what, _, body) => what -> measure(body()) }
+    val costs = statements.map { case (what, _, body) =>
+      what -> measure(body()).copy(maxTaskResult = 0L) }
     val want = statements.map { case (what, jobs, _) => what -> Cost(jobs, 0, 0) }
     assert(costs == want, s"$layout statement costs")
   }
@@ -137,8 +148,8 @@ class JobBudgetSpec extends SparkSpec {
     check("bloom", Seq(
       ("merge", 10, () => merge(t)),
       ("delete", 11, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
-      ("key select", 2, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
-      ("secondary select", 4, () => assert(
+      ("key select", 1, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
+      ("secondary select", 3, () => assert(
         select(s"SELECT $Cols FROM $t WHERE user_id = 12") > 0))))
   }
 
@@ -146,9 +157,63 @@ class JobBudgetSpec extends SparkSpec {
     val t = create("bloom", "budget_bloom_cdc")
     SqlCall.exec(spark, s"CALL enable_cdc('$t')").collect()
     check("bloom cdc", Seq(
-      ("merge", 11, () => merge(t)),
+      ("merge", 10, () => merge(t)),
       ("change feed", 1, () => assert(SqlCall.exec(spark,
         s"CALL table_changes('$t', 1, 'cdc')").collect().length == 200))))
+  }
+
+  test("bloom statements send the driver O(files), not a value per batch row") {
+    // 40,000 rows in 4 files with a bound SECONDARY index; each statement
+    // runs with 400 and with 40,000 keys (both past the literal-IN bound)
+    spark.range(0, 40000).selectExpr("id AS event_id",
+      "CAST(id % 997 AS INT) AS user_id", "'view' AS event_type",
+      "CAST(id AS DOUBLE) AS value", "1 AS day", "0L AS rev")
+      .createOrReplaceTempView("drv_init")
+    val path = Files.createTempDirectory("budgetdrv").toString + "/t"
+    SqlDdl.exec(spark,
+      s"""CREATE TABLE budget_drv TBLPROPERTIES (
+         |  'graft.table.layout' = 'bloom', 'graft.table.path' = '$path',
+         |  'graft.table.primaryKey' = 'event_id',
+         |  'graft.table.preCombineField' = 'rev', 'graft.table.numFiles' = '4')
+         |AS SELECT $Cols FROM drv_init""".stripMargin)
+    SqlIndex.exec(spark,
+      "CREATE INDEX budget_drv_sec ON budget_drv USING SECONDARY (user_id)").collect()
+    // every batch row moves its secondary mapping
+    def batch(n: Int, rev: Long) = spark.range(0, n)
+      .selectExpr(s"id * ${40000 / n} AS event_id",
+        s"CAST((id * ${40000 / n} + $rev) % 997 AS INT) AS user_id",
+        "'view' AS event_type", "1.0D AS value", "1 AS day", s"${rev}L AS rev")
+    def keys(n: Int) =
+      spark.range(0, n).selectExpr(s"id * ${40000 / n} AS event_id").localCheckpoint()
+    def maxResult(body: Int => Unit): Map[Int, Long] =
+      Seq(400, 40000).map(n => n -> measure(body(n)).maxTaskResult).toMap
+    // a broadcast join ships its build side through the driver up to
+    // Spark's autoBroadcastJoinThreshold (a shuffle join past it): off
+    // here, so what is measured is the engine's own traffic
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try {
+      val merge = maxResult(n => BloomTable.upsertInto(spark, path,
+        batch(n, if (n == 400) 1L else 2L).localCheckpoint()))
+      // the index followed every moved mapping: user_id = (event_id + 2) % 997
+      assert(SqlRead.select(spark, s"SELECT $Cols FROM budget_drv WHERE user_id = 5")
+        .collect().map(_.getLong(0)).sorted.toSeq == (0 to 40).map(3L + 997L * _))
+      val costs = Seq(
+        "merge" -> merge,
+        "lookupMany" -> maxResult(n =>
+          assert(BloomTable.lookupMany(spark, path, keys(n)).count() == n)),
+        "delete" -> maxResult(n => BloomTable.deleteFrom(spark, path, keys(n))))
+      // 100 times the keys may not send the driver even twice the bytes
+      // (one value per key would: ~10,000 keys per task at 40,000)
+      costs.foreach { case (what, m) =>
+        assert(m(40000) < 2 * m(400),
+          s"$what: max task result ${m(400)} B at 400 keys, ${m(40000)} B at 40,000")
+      }
+    } finally spark.conf.set(threshold, was)
+    assert(BloomTable.read(spark, path).count() == 0)
+    assert(SqlRead.select(spark, s"SELECT $Cols FROM budget_drv WHERE user_id = 5")
+      .collect().isEmpty)
   }
 
   test("partitioned: MERGE, DELETE and key reads within budget") {

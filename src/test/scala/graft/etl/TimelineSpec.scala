@@ -108,9 +108,10 @@ class TimelineSpec extends SparkSpec {
     assert(Timeline.attemptOcc(spark, dir, rows(("b", 1L, 2.0), ("c", 1L, 3.0)),
       Seq("k"), "pc", Nil, base = Some(0L)).contains(1L))
     assert(Timeline.instants(dir).find(_.version == 1L).map(_.n_rows).contains(3L))
-    // a CRASHED attempt's staged dir (mtime past the lock-expiry
-    // window) is debris; a FRESH one is an in-flight writer between its
-    // stage write and its in-lock rename, and must survive (the age gate)
+    // a CRASHED attempt's staged dir (it and everything in it untouched
+    // for longer than a writer may queue for the lock) is debris; an
+    // in-flight writer's must survive, whether it is still writing or
+    // waiting for the lock after its write (the age gate)
     def staged(): Seq[String] = {
       val s = Files.list(java.nio.file.Paths.get(dir))
       try s.iterator().asScala.map(_.getFileName.toString)
@@ -118,18 +119,34 @@ class TimelineSpec extends SparkSpec {
       finally s.close()
     }
     assert(staged().isEmpty)
-    def crash(name: String) = Files.setLastModifiedTime(
-      Files.createDirectories(java.nio.file.Paths.get(dir, name)),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - FsLock.LockExpiryMs - 60000L))
+    def age(p: java.nio.file.Path, ms: Long) = Files.setLastModifiedTime(p,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ms))
+    val old = FsLock.QueueWaitMs + 60000L
+    def crash(name: String) = {
+      val d = Files.createDirectories(java.nio.file.Paths.get(dir, name))
+      age(Files.writeString(d.resolve("part-0.parquet"), "x"), old)
+      age(d, old)
+    }
     crash("_staged-1")
     Files.createDirectories(java.nio.file.Paths.get(dir, "_staged-2"))
+    // still writing: the dir is old, but a task file under its
+    // `_temporary` was written just now
+    val writing = Files.createDirectories(
+      java.nio.file.Paths.get(dir, "_staged-4", "_temporary", "0"))
+    Files.writeString(writing.resolve("part-0.parquet"), "x")
+    Seq(writing, writing.getParent, writing.getParent.getParent).foreach(age(_, old))
+    Files.setLastModifiedTime(writing.resolve("part-0.parquet"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    // written, then queued for the lock past the lock expiry but within
+    // the queue wait
+    age(Files.createDirectories(java.nio.file.Paths.get(dir, "_staged-5")),
+      FsLock.LockExpiryMs + 1000L)
     assert(Timeline.clean(dir, retain = 2).isEmpty)
-    assert(staged() == Seq("_staged-2"))
+    assert(staged() == Seq("_staged-2", "_staged-4", "_staged-5"))
     // the SQL verb runs the same sweep
     crash("_staged-3")
     SqlCall.exec(spark, "CALL clean_commits('occ_clean_tl', 2)").collect()
-    assert(staged() == Seq("_staged-2"))
+    assert(staged() == Seq("_staged-2", "_staged-4", "_staged-5"))
     assert(Timeline.read(spark, dir).count() == 3)
   }
 
