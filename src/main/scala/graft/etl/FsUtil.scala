@@ -37,13 +37,16 @@ object FsUtil {
     */
   def staleDirs(dir: Path, prefix: String): Seq[Path] = {
     val cutoffMs = System.currentTimeMillis() - FsLock.QueueWaitMs
-    def newestMs(d: Path): Long = {
-      val w = Files.walk(d)
-      try w.iterator().asScala.map(f =>
-        try Files.getLastModifiedTime(f).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => Long.MaxValue }).max
-      finally w.close()
-    }
+    // an entry that vanishes mid-walk belongs to a write in progress
+    def newestMs(d: Path): Long =
+      try {
+        val w = Files.walk(d)
+        try w.iterator().asScala.map(Files.getLastModifiedTime(_).toMillis).max
+        finally w.close()
+      } catch {
+        case _: java.nio.file.NoSuchFileException | _: java.io.UncheckedIOException =>
+          Long.MaxValue
+      }
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val s = Files.list(dir)
