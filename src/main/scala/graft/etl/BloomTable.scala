@@ -56,7 +56,9 @@ import scala.jdk.CollectionConverters._
   * reads only matched files; the index update scans only freshly
   * written files.
   */
-object BloomTable {
+object BloomTable extends TableLayout {
+
+  val kind = "bloom"
 
   private def manifestPath(t: String): Path = Paths.get(t, "_manifest")
   private def propsPath(t: String): Path = Paths.get(t, "_props")
@@ -192,36 +194,12 @@ object BloomTable {
       }
     }
 
-  /** Commit wall-clock times from the `ts=` token (None on lines
-    * written before timestamps were recorded).
-    */
-  private def commitTimes(tablePath: String): Seq[(Long, Option[Long])] =
-    CommitLogFile.fullLines(tablePath).flatMap(_.split(' ') match {
-      case Array(no, _, rest @ _*) if no.nonEmpty && no.forall(_.isDigit) =>
-        Some((no.toLong, rest.collectFirst {
-          case t if t.startsWith("ts=") && t.drop(3).forall(_.isDigit) =>
-            t.drop(3).toLong
-        }))
-      case _ => None
-    })
+  def resolveAsOf(tablePath: String, tsMs: Long): Long =
+    CommitLogFile.resolveAsOf(tablePath, tsMs)
 
-  /** `TIMESTAMP AS OF` resolution — the Timeline.resolveAsOf contract
-    * over the bloom commit log: newest commit at or before `tsMs`,
-    * loud earlier (with a hint for pre-timestamp commits).
-    */
-  def resolveAsOf(tablePath: String, tsMs: Long): Long = {
-    val timed = commitTimes(tablePath)
-    require(timed.nonEmpty, s"no commits at $tablePath")
-    val candidates = timed.collect { case (no, Some(t)) if t <= tsMs => no }
-    if (candidates.isEmpty) {
-      val untimed = timed.count(_._2.isEmpty)
-      throw new IllegalArgumentException(
-        s"no commit at or before $tsMs at $tablePath" +
-          (if (untimed > 0) s" ($untimed commits predate timestamps — " +
-            "resolve those with VERSION AS OF)" else ""))
-    }
-    candidates.max
-  }
+  def showCommits(spark: SparkSession, tablePath: String): DataFrame =
+    commitFrame(spark, CommitLogFile.entries(tablePath).map {
+      case (no, kind, ts) => (no, kind, ts.getOrElse(-1L)) })
 
   /** The live-file set AS OF `commit`: fold every logged file delta
     * through it. Loud on upgraded tables (log doesn't cover birth),
@@ -303,14 +281,6 @@ object BloomTable {
     else readFiles(spark, tablePath, files)
   }
 
-  /** Fold all but the newest `keepLatest` active `_commits` lines into
-    * `_commits_archive` — same move as [[BucketTable.archiveCommits]].
-    */
-  def archiveCommits(tablePath: String, keepLatest: Int): Seq[Long] =
-    FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
-      CommitLogFile.archive(tablePath, keepLatest)
-    }
-
   /** The newest commit number — the incremental consumer's checkpoint. */
   def latestCommit(tablePath: String): Long =
     commitLog(tablePath).map(_._1).maxOption.getOrElse(0L)
@@ -357,13 +327,13 @@ object BloomTable {
     * windows — the image feed expresses deletions and update priors
     * exactly on every commit kind.
     */
-  def enableCdc(tablePath: String): Unit =
+  override def enableCdc(tablePath: String): Unit =
     CdcLog.enable(tablePath, latestCommit(tablePath))
 
   /** The row-level CDC feed for `(sinceCommit, head]` — op ∈ {i,u,d},
     * before/after images, `_change_seq` = the commit number.
     */
-  def changesCdc(spark: SparkSession, tablePath: String,
+  override def changesCdc(spark: SparkSession, tablePath: String,
       sinceCommit: Long): DataFrame =
     CdcLog.changes(spark, tablePath, sinceCommit, latestCommit(tablePath))
 
@@ -1394,37 +1364,6 @@ object BloomTable {
       sample, in = true)
   }
 
-  // ---- bound secondary index (see SecondaryIndex.createBloom) --------
-
-  private def secIdxPath(tablePath: String): Path =
-    Paths.get(tablePath, "_secidx")
-
-  /** The bound mapping indexes: (secondary cols, index path) per
-    * index — a table may bind several, one per query pattern.
-    * Engine-level (a table-dir file), so every mutation primitive
-    * maintains them, programmatic writers included (the discipline
-    * shared by every layout's secondary-index binding).
-    */
-  def boundSecondaryIndexes(tablePath: String): Seq[(Seq[String], String)] =
-    SecondaryIndex.readBindings(secIdxPath(tablePath))
-
-  def boundSecondaryIndex(tablePath: String): Option[(Seq[String], String)] =
-    boundSecondaryIndexes(tablePath).headOption
-
-  def bindSecondaryIndex(tablePath: String, secCols: Seq[String],
-      indexPath: String): Unit =
-    SecondaryIndex.addBinding(secIdxPath(tablePath), secCols, indexPath)
-
-  /** Unbind every index (test/repair helper). */
-  def unbindSecondaryIndex(tablePath: String): Unit = {
-    Files.deleteIfExists(secIdxPath(tablePath))
-    ()
-  }
-
-  /** Unbind one index by its artifact path (DROP INDEX). */
-  def unbindSecondaryIndex(tablePath: String, indexPath: String): Unit =
-    SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
-
   /** Commit each bound index's mapping delta for commit `commitNo` —
     * `delta(secCols, i)` for the i-th binding, None when nothing moved
     * — then record the commit covered. Runs after the manifest swing;
@@ -1466,10 +1405,8 @@ object BloomTable {
       s"expected ${p.keys.length} key values (${p.keys.mkString(",")})")
     val schema = read(spark, tablePath).schema
     // a one-row LOCAL probe: its tag evaluates on the driver, no job
-    val probe = p.keys.zip(keyValues).foldLeft(spark.createDataFrame(
-      java.util.List.of(Row()), StructType(Nil))) {
-      case (df, (k, v)) => df.withColumn(k, lit(v).cast(schema(k).dataType))
-    }
+    val probe = Layout.literalRow(spark,
+      p.keys.map(k => k -> schema(k).dataType), keyValues)
     val snap = indexSnapshot(spark, tablePath, p)
     val candidates =
       if (snap.rows.isEmpty) Seq.empty
@@ -1531,7 +1468,7 @@ object BloomTable {
     * Old commits stay readable until [[clean]]. Returns the commit id.
     */
   def cluster(spark: SparkSession, tablePath: String, sortCols: Seq[String],
-      targetFileRows: Long = 4000000L): Long =
+      targetFileRows: Long): Long =
     withTableLock(tablePath) {
       require(sortCols.nonEmpty, "at least one clustering sort column")
       val p = props(tablePath)
@@ -1571,78 +1508,40 @@ object BloomTable {
     else Some(compact(spark, tablePath))
   }
 
-  /** Remove data files no longer in the manifest and index versions
-    * before the latest. `keepVersions > 0` additionally retains every
-    * file the newest `keepVersions` commits' snapshots reference
-    * (Hudi's KEEP_LATEST_COMMITS cleaner policy) — `VERSION AS OF` is
-    * then GUARANTEED within the retention window, loud outside it.
-    * Returns removed paths (table-relative).
+  // ---- savepoints (the pin file family is TableLayout's) -------------
+
+  /** A bloom savepoint pins a copy of the manifest's file list — the
+    * [[BucketTable]] design applied to a file manifest instead of a
+    * bucket→generation map.
     */
-  // ---- savepoints (Hudi's savepoint/restore on the bloom layout) -----
-
-  private val SavepointPrefix = "_savepoint_"
-
-  private def savepointPath(tablePath: String, name: String): Path = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"invalid savepoint name: $name")
-    Paths.get(tablePath, SavepointPrefix + name)
-  }
-
-  /** Pin the CURRENT committed state under `name`: a copy of the
-    * manifest's file list that [[clean]] treats as live, so later
-    * upserts/deletes/clusterings can never reclaim the files this
-    * state reads from — the [[BucketTable.savepoint]] design applied
-    * to a file manifest instead of a bucket→generation map.
-    * O(manifest) metadata, no data copied.
-    */
-  def savepoint(tablePath: String, name: String): Unit = {
-    val p = savepointPath(tablePath, name)
-    require(!Files.exists(p), s"savepoint $name already exists")
+  protected def savepointBody(tablePath: String): String = {
     val m = manifest(tablePath)
     require(m.nonEmpty, s"no committed state to savepoint at $tablePath")
-    val tmp = Paths.get(tablePath, s"${SavepointPrefix}.tmp${System.nanoTime()}")
-    Files.writeString(tmp, m.mkString("", "\n", "\n"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-    ()
+    m.mkString("", "\n", "\n")
   }
 
-  /** Savepoint names currently pinned. */
-  def savepoints(tablePath: String): Seq[String] = {
-    val s = Files.list(Paths.get(tablePath))
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(SavepointPrefix) &&
-        n.drop(SavepointPrefix.length).matches("[A-Za-z0-9_-]+"))
-      .map(_.drop(SavepointPrefix.length)).toSeq.sorted
-    finally s.close()
-  }
-
-  private def savepointFiles(tablePath: String, name: String): Seq[String] = {
-    val p = savepointPath(tablePath, name)
-    require(Files.exists(p), s"no savepoint $name at $tablePath")
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq
-  }
-
-  /** Read the table AS OF a savepoint — time travel to the pinned file
-    * set, without touching the live manifest. Loud if any pinned file
-    * vanished (only possible by external deletion — [[clean]] treats
-    * pinned files as live).
+  /** The pinned file set; loud if any pinned file vanished (only
+    * possible by external deletion — [[clean]] treats pinned files as
+    * live).
     */
-  def readSavepoint(spark: SparkSession, tablePath: String,
-      name: String): DataFrame = {
-    val files = savepointFiles(tablePath, name)
+  private def savepointFiles(tablePath: String, name: String): Seq[String] = {
+    val files = savepointLines(tablePath, name)
     val missing = files.filterNot(entryExists(tablePath, _))
     require(missing.isEmpty,
       s"savepoint $name at $tablePath: pinned file(s) " +
         s"${missing.mkString(",")} are gone — the savepoint no longer " +
         "resolves")
-    readFiles(spark, tablePath, files)
+    files
   }
 
-  /** Roll the table BACK to a savepoint: one manifest swing to the
-    * pinned file list (Hudi's restore), logged as its own `restore`
-    * commit — destructive for the incremental feed (rows may vanish
-    * with no per-file ADD to express it), so [[changedSince]] windows
-    * spanning it fail loudly toward a re-sync and the cdc floor
+  def readSavepoint(spark: SparkSession, tablePath: String,
+      name: String): DataFrame =
+    readFiles(spark, tablePath, savepointFiles(tablePath, name))
+
+  /** One manifest swing to the pinned file list, logged as its own
+    * `restore` commit — destructive for the incremental feed (rows may
+    * vanish with no per-file ADD to express it), so [[changedSince]]
+    * windows spanning it fail loudly toward a re-sync and the cdc floor
     * ratchets. The filter index is rebuilt over the restored set (the
     * current index version describes the superseded live set).
     * Commits after the savepoint become unreferenced debris for
@@ -1657,11 +1556,6 @@ object BloomTable {
       s"restore at $tablePath with a bound secondary index would leave " +
         "the index diverged — DROP INDEX first, restore, then re-create")
     val files = savepointFiles(tablePath, name)
-    val missing = files.filterNot(entryExists(tablePath, _))
-    require(missing.isEmpty,
-      s"restore to $name at $tablePath: pinned file(s) " +
-        s"${missing.mkString(",")} are gone — the savepoint no longer " +
-        "resolves")
     withTableLock(tablePath) {
       val commit = nextCommit(tablePath)
       writeManifest(tablePath, files, commit, "restore",
@@ -1672,15 +1566,17 @@ object BloomTable {
     }
   }
 
-  /** Unpin a savepoint; its files become reclaimable by [[clean]]
-    * unless still referenced by the live manifest or another savepoint.
-    */
-  def dropSavepoint(tablePath: String, name: String): Unit = {
-    Files.deleteIfExists(savepointPath(tablePath, name))
-    ()
-  }
+  def changeCounts(tablePath: String): (Long, Long, Long) =
+    (0L, latestCommit(tablePath), 0L)
 
-  def clean(tablePath: String, keepVersions: Int = 0): Seq[String] = {
+  /** Remove data files no longer in the manifest and index versions
+    * before the latest. `keepVersions > 0` additionally retains every
+    * file the newest `keepVersions` commits' snapshots reference
+    * (Hudi's KEEP_LATEST_COMMITS cleaner policy) — `VERSION AS OF` is
+    * then GUARANTEED within the retention window, loud outside it.
+    * Returns removed paths (table-relative).
+    */
+  def clean(tablePath: String, keepVersions: Int): Seq[String] = {
     val head = latestCommit(tablePath)
     val retained: Set[String] =
       if (keepVersions <= 0) Set.empty
@@ -1694,7 +1590,7 @@ object BloomTable {
       }
     // savepoint-pinned files count as live — the pin IS the contract
     val pinned = savepoints(tablePath)
-      .flatMap(savepointFiles(tablePath, _)).toSet
+      .flatMap(savepointLines(tablePath, _)).toSet
     val live = manifest(tablePath).toSet ++ retained ++ pinned
     val base = Paths.get(tablePath)
     def listDir(p: Path): Seq[Path] = {

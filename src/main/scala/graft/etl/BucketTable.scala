@@ -42,7 +42,9 @@ import scala.jdk.CollectionConverters._
   * readers, removed by [[clean]] (Hudi's rollback of an uncommitted
   * instant works the same way).
   */
-object BucketTable {
+object BucketTable extends TableLayout {
+
+  val kind = "bucket"
 
   private val BucketCol = "__bucket"
 
@@ -198,37 +200,12 @@ object BucketTable {
       case _ => None
     }
 
-  /** Commit wall-clock times from the `ts=` token (None on lines
-    * written before timestamps were recorded).
-    */
-  private def commitTimes(tablePath: String): Seq[(Long, Option[Long])] =
-    CommitLogFile.fullLines(tablePath).flatMap(_.split(' ') match {
-      case Array(no, _, rest @ _*) if no.nonEmpty && no.forall(_.isDigit) =>
-        Some((no.toLong, rest.collectFirst {
-          case t if t.startsWith("ts=") && t.drop(3).forall(_.isDigit) =>
-            t.drop(3).toLong
-        }))
-      case _ => None
-    })
+  def resolveAsOf(tablePath: String, tsMs: Long): Long =
+    CommitLogFile.resolveAsOf(tablePath, tsMs)
 
-  /** `TIMESTAMP AS OF` resolution: the newest commit whose recorded
-    * wall clock is at or before `tsMs` (Timeline.resolveAsOf's exact
-    * contract) — earlier timestamps are loud, with a hint when
-    * pre-upgrade commits simply predate timestamp recording.
-    */
-  def resolveAsOf(tablePath: String, tsMs: Long): Long = {
-    val timed = commitTimes(tablePath)
-    require(timed.nonEmpty, s"no commits at $tablePath")
-    val candidates = timed.collect { case (no, Some(t)) if t <= tsMs => no }
-    if (candidates.isEmpty) {
-      val untimed = timed.count(_._2.isEmpty)
-      throw new IllegalArgumentException(
-        s"no commit at or before $tsMs at $tablePath" +
-          (if (untimed > 0) s" ($untimed commits predate timestamps — " +
-            "resolve those with VERSION AS OF)" else ""))
-    }
-    candidates.max
-  }
+  def showCommits(spark: SparkSession, tablePath: String): DataFrame =
+    commitFrame(spark, CommitLogFile.entries(tablePath).map {
+      case (no, _, ts) => (no, "commit", ts.getOrElse(-1L)) })
 
   /** The ACTIVE commit log — the hot-path read (one short file however
     * old the table, once [[archiveCommits]] runs periodically).
@@ -244,17 +221,6 @@ object BucketTable {
     */
   def fullCommitLog(tablePath: String): Seq[(Long, Set[Int])] =
     CommitLogFile.fullLines(tablePath).flatMap(parseCommitLine)
-
-  /** Fold all but the newest `keepLatest` active `_commits` lines into
-    * `_commits_archive` ([[CommitLogFile]] — the Timeline.archive move
-    * on a line log): bounds the active log every commit and pull
-    * reads; cursors behind the boundary resolve through the archive.
-    * Locked: the active-log rewrite would race writers' appends.
-    */
-  def archiveCommits(tablePath: String, keepLatest: Int): Seq[Long] =
-    FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
-      CommitLogFile.archive(tablePath, keepLatest)
-    }
 
   /** The commit log WITH generation info: commit → (bucket →
     * Some(generation) for a repoint, None for a retirement). Lines
@@ -461,41 +427,6 @@ object BucketTable {
     if (changed.nonEmpty) commit else commit - 1
   }
 
-  // ---- bound secondary index (see SecondaryIndex.create) -------------
-
-  private def secIdxPath(tablePath: String): Path =
-    Paths.get(tablePath, "_secidx")
-
-  /** The bound mapping indexes: (secondary cols, index path) per
-    * index — a table may bind several, one per query pattern.
-    * Engine-level (a table-dir file, not catalog state) so EVERY
-    * mutation primitive maintains them — programmatic writers
-    * included, which keeps the SQL DML routes hook-free here (the
-    * partitioned and MOR layouts' existing discipline, adopted by
-    * bucket so a direct `BucketTable.upsertInto` can no longer
-    * silently strand an index; any historical gap heals on serve via
-    * [[SecondaryIndex.ensureCurrent]]).
-    */
-  def boundSecondaryIndexes(tablePath: String): Seq[(Seq[String], String)] =
-    SecondaryIndex.readBindings(secIdxPath(tablePath))
-
-  def boundSecondaryIndex(tablePath: String): Option[(Seq[String], String)] =
-    boundSecondaryIndexes(tablePath).headOption
-
-  def bindSecondaryIndex(tablePath: String, secCols: Seq[String],
-      indexPath: String): Unit =
-    SecondaryIndex.addBinding(secIdxPath(tablePath), secCols, indexPath)
-
-  /** Unbind every index (test/repair helper). */
-  def unbindSecondaryIndex(tablePath: String): Unit = {
-    Files.deleteIfExists(secIdxPath(tablePath))
-    ()
-  }
-
-  /** Unbind one index by its artifact path (DROP INDEX). */
-  def unbindSecondaryIndex(tablePath: String, indexPath: String): Unit =
-    SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
-
   /** Pre-commit full-row state of a batch's keys — the before side of
     * an index reconcile (empty-table-safe).
     */
@@ -628,7 +559,7 @@ object BucketTable {
     * rescale/cluster/compact contributes zero rows instead of a
     * whole-table restate.
     */
-  def enableCdc(tablePath: String): Unit =
+  override def enableCdc(tablePath: String): Unit =
     CdcLog.enable(tablePath, latestCommit(tablePath))
 
   /** The row-level CDC feed for `(sinceCommit, head]`: `_op` ∈ {i,u,d},
@@ -637,7 +568,7 @@ object BucketTable {
     * destructive overwrite/restore in between) and on windows with
     * missing images — see [[CdcLog.changes]].
     */
-  def changesCdc(spark: SparkSession, tablePath: String,
+  override def changesCdc(spark: SparkSession, tablePath: String,
       sinceCommit: Long): DataFrame =
     CdcLog.changes(spark, tablePath, sinceCommit, latestCommit(tablePath))
 
@@ -1125,9 +1056,8 @@ object BucketTable {
     require(bucketValues.length == p.bucketBy.length,
       s"expected ${p.bucketBy.length} bucket-key values (${p.bucketBy.mkString(",")})")
     val keyTypes = read(spark, tablePath).schema
-    val keyDf = p.bucketBy.zip(bucketValues).foldLeft(spark.range(1).toDF()) {
-      case (df, (k, v)) => df.withColumn(k, lit(v).cast(keyTypes(k).dataType))
-    }
+    val keyDf = Layout.literalRow(spark,
+      p.bucketBy.map(k => k -> keyTypes(k).dataType), bucketValues)
     withBucket(keyDf, p).select(col(BucketCol)).head().getInt(0)
   }
 
@@ -1196,11 +1126,8 @@ object BucketTable {
     require(combos.nonEmpty && combos.forall(_.length == p.bucketBy.length),
       s"each combination must cover ${p.bucketBy.mkString(",")}")
     val schema = read(spark, tablePath).schema
-    val probe0 = combos.map { vs =>
-      p.bucketBy.zip(vs).foldLeft(spark.range(1).toDF()) {
-        case (df, (c, v)) => df.withColumn(c, lit(v).cast(schema(c).dataType))
-      }.drop("id")
-    }.reduce(_.unionByName(_))
+    val probe0 = combos.map(Layout.literalRow(spark,
+      p.bucketBy.map(c => c -> schema(c).dataType), _)).reduce(_.unionByName(_))
     val (_, buckets) = checkpointRouted(withBucket(probe0, p))
     // the combinations are driver literals already: a null-safe filter
     // keeps exactly their rows without a broadcast job
@@ -1415,7 +1342,7 @@ object BucketTable {
     * commit is one atomic manifest swing. Returns the new generation.
     */
   def cluster(spark: SparkSession, tablePath: String, sortCols: Seq[String],
-      targetFileRows: Long = 4000000L): Long =
+      targetFileRows: Long): Long =
     FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       val p = props(tablePath)
       val m = manifest(tablePath)
@@ -1500,44 +1427,20 @@ object BucketTable {
       gen
     }
 
-  private val SavepointPrefix = "_savepoint_"
+  // ---- savepoints (the pin file family is TableLayout's) -------------
 
-  private def savepointPath(tablePath: String, name: String): Path = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"invalid savepoint name: $name")
-    Paths.get(tablePath, SavepointPrefix + name)
-  }
-
-  /** Pin the CURRENT committed state under `name` (Hudi's savepoint):
-    * a copy of the manifest that [[clean]] treats as live, so later
-    * upserts/compactions can never reclaim the generations this state
-    * reads from. O(manifest) metadata — no data copied.
+  /** A bucket savepoint pins a copy of the manifest, with the ROUTING
+    * config: a later [[rescale]] rewrites numBuckets, and restoring
+    * just the old manifest under the new bucket count would route
+    * lookups/upserts to buckets the pinned state never had (empty
+    * lookups, split keys).
     */
-  def savepoint(tablePath: String, name: String): Unit = {
-    val p = savepointPath(tablePath, name)
-    require(!Files.exists(p), s"savepoint $name already exists")
+  protected def savepointBody(tablePath: String): String = {
     val m = manifest(tablePath)
     require(m.nonEmpty, s"no committed state to savepoint at $tablePath")
-    // pin the ROUTING config alongside the manifest: a later [[rescale]]
-    // rewrites numBuckets, and restoring just the old manifest under the
-    // new bucket count would route lookups/upserts to buckets the pinned
-    // state never had (empty lookups, split keys)
     val pr = props(tablePath)
-    val tmp = Paths.get(tablePath, s"${SavepointPrefix}.tmp${System.nanoTime()}")
-    Files.writeString(tmp,
-      (s"props numBuckets=${pr.numBuckets} bucketBy=${pr.bucketBy.mkString(",")}" +:
-        m.toSeq.sorted.map { case (b, g) => s"$b $g" }).mkString("\n"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Savepoint names currently pinned. */
-  def savepoints(tablePath: String): Seq[String] = {
-    val s = Files.list(Paths.get(tablePath))
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(SavepointPrefix) &&
-        n.drop(SavepointPrefix.length).matches("[A-Za-z0-9_-]+"))
-      .map(_.drop(SavepointPrefix.length)).toSeq.sorted
-    finally s.close()
+    (s"props numBuckets=${pr.numBuckets} bucketBy=${pr.bucketBy.mkString(",")}" +:
+      m.toSeq.sorted.map { case (b, g) => s"$b $g" }).mkString("\n")
   }
 
   /** Generations referenced by any savepoint — writers must never
@@ -1553,14 +1456,10 @@ object BucketTable {
   private def nextGen(tablePath: String): Long =
     ((manifest(tablePath).values ++ pinnedGens(tablePath)) ++ Seq(-1L)).max + 1
 
-  private def savepointManifest(tablePath: String, name: String): Map[Int, Long] = {
-    val p = savepointPath(tablePath, name)
-    require(Files.exists(p), s"no savepoint $name at $tablePath")
-    Files.readAllLines(p).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("props ")).map { l =>
-        val Array(b, g) = l.split(' '); b.toInt -> g.toLong
-      }.toMap
-  }
+  private def savepointManifest(tablePath: String, name: String): Map[Int, Long] =
+    savepointLines(tablePath, name).filterNot(_.startsWith("props ")).map { l =>
+      val Array(b, g) = l.split(' '); b.toInt -> g.toLong
+    }.toMap
 
   /** (numBuckets, bucketBy) pinned by the savepoint; None for
     * savepoints written before routing was pinned (pre-rescale format —
@@ -1568,34 +1467,30 @@ object BucketTable {
     */
   private def savepointRouting(tablePath: String,
       name: String): Option[(Int, Seq[String])] =
-    Files.readAllLines(savepointPath(tablePath, name)).asScala
-      .find(_.startsWith("props ")).map { l =>
-        val kv = l.drop(6).split(' ').map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> v }.toMap
-        (kv("numBuckets").toInt,
-          kv.getOrElse("bucketBy", "").split(',').toSeq.filter(_.nonEmpty))
-      }
+    savepointLines(tablePath, name).find(_.startsWith("props ")).map { l =>
+      val kv = l.drop(6).split(' ').map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
+      (kv("numBuckets").toInt,
+        kv.getOrElse("bucketBy", "").split(',').toSeq.filter(_.nonEmpty))
+    }
 
-  /** Read the table AS OF a savepoint — time travel to the pinned
-    * state, without touching the live manifest.
-    */
   def readSavepoint(spark: SparkSession, tablePath: String,
       name: String): DataFrame = {
     val m = savepointManifest(tablePath, name)
     readBuckets(spark, tablePath, m.keySet, m).drop(BucketCol)
   }
 
-  /** Roll the table BACK to a savepoint: atomically swing the live
-    * manifest to the pinned one (Hudi's restore). Taken under the
+  /** Atomically swing the live manifest to the pinned one, under the
     * table lock so a concurrent OCC writer can't interleave its own
     * manifest swing with the restore. Generations committed after the
     * savepoint become unreferenced debris for [[clean]].
     */
-  def restoreSavepoint(tablePath: String, name: String): Unit = {
+  def restoreSavepoint(spark: SparkSession, tablePath: String,
+      name: String): Unit = {
     // a restore rewrites table state with no per-row diff to reconcile
-    // the index by (and no SparkSession here to rebuild it) — refuse
-    // loudly rather than leave the index diverged from restored state
-    // (the PartitionedTable.restoreSavepoint contract)
+    // the index by — refuse loudly rather than leave the index diverged
+    // from restored state (the PartitionedTable.restoreSavepoint
+    // contract)
     require(boundSecondaryIndexes(tablePath).isEmpty,
       s"restore at $tablePath with a bound secondary index would leave " +
         "the index diverged — DROP INDEX first, restore, then re-create")
@@ -1617,14 +1512,8 @@ object BucketTable {
     ()
   }
 
-  /** Unpin a savepoint; its generations become reclaimable by
-    * [[clean]] unless still referenced by the live manifest or another
-    * savepoint.
-    */
-  def dropSavepoint(tablePath: String, name: String): Unit = {
-    Files.deleteIfExists(savepointPath(tablePath, name))
-    ()
-  }
+  def changeCounts(tablePath: String): (Long, Long, Long) =
+    (0L, latestCommit(tablePath), 0L)
 
   /** Drop generation dirs no manifest entry references (aborted writers,
     * superseded buckets). Generations referenced by a [[savepoint]]
@@ -1636,7 +1525,7 @@ object BucketTable {
     * cannot reconstruct those snapshots (pre-upgrade history).
     * Returns removed dir names.
     */
-  def clean(tablePath: String, keepVersions: Int = 0): Seq[String] = {
+  def clean(tablePath: String, keepVersions: Int): Seq[String] = {
     def listDir(p: Path): Seq[Path] = {
       val s = Files.list(p)
       try s.iterator().asScala.toSeq finally s.close()

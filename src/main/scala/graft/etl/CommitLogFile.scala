@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Archival for the CoW layouts' single-file `_commits` logs — the
-  * [[Timeline.archive]] move applied to an append-only line log: fold
+  * [[Timeline.archiveCommits]] move applied to an append-only line log: fold
   * every line but the newest `keepLatest` into `_commits_archive` (an
   * append-only batch file read only by history/old-cursor paths) and
   * rewrite the active log to the kept suffix. Bounds the per-commit
@@ -56,6 +56,51 @@ object CommitLogFile {
     val p = archivePath(tablePath)
     if (!Files.exists(p)) Seq.empty
     else Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq
+  }
+
+  /** (commit, second token, wall clock) per logged commit, archived
+    * lines included. The bucket, bloom and partitioned writers end a
+    * line with a `ts=` token (None on lines written before timestamps
+    * were recorded); bloom and partitioned lines name the commit's kind
+    * second.
+    */
+  def entries(tablePath: String): Seq[(Long, String, Option[Long])] =
+    fullLines(tablePath).flatMap(_.split(' ') match {
+      case Array(no, second, rest @ _*) =>
+        Some((no.toLong, second, rest.collectFirst {
+          case t if t.length > 3 && t.startsWith("ts=") &&
+              t.drop(3).forall(_.isDigit) => t.drop(3).toLong
+        }))
+      case _ => None
+    })
+
+  /** `TIMESTAMP AS OF` over a `ts=`-stamped log: the newest commit at
+    * or before `tsMs` ([[newestAtOrBefore]]).
+    */
+  def resolveAsOf(tablePath: String, tsMs: Long): Long = {
+    val logged = entries(tablePath)
+    require(logged.nonEmpty, s"no commits at $tablePath")
+    newestAtOrBefore(tablePath, tsMs,
+      logged.collect { case (no, _, Some(t)) => (no, t) },
+      logged.count(_._3.isEmpty))
+  }
+
+  /** The one `TIMESTAMP AS OF` contract every layout resolves by (the
+    * timeline's instants and the MOR seq-time log parse their own
+    * logs): the newest of the `timed` (version, wall clock) pairs at or
+    * before `tsMs`. Loud when none is, with a hint when `untimed`
+    * commits predate timestamps — resolving those by wall clock would
+    * be a guess.
+    */
+  def newestAtOrBefore(tablePath: String, tsMs: Long,
+      timed: Seq[(Long, Long)], untimed: Int): Long = {
+    val candidates = timed.collect { case (no, t) if t <= tsMs => no }
+    if (candidates.isEmpty)
+      throw new IllegalArgumentException(
+        s"no commit at or before $tsMs at $tablePath" +
+          (if (untimed > 0) s" ($untimed commits predate timestamps — " +
+            "resolve those with VERSION AS OF)" else ""))
+    candidates.max
   }
 
   /** archived ++ active, deduped by commit number (first copy wins —

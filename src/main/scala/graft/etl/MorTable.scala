@@ -39,7 +39,9 @@ import scala.jdk.CollectionConverters._
   * on a tie the later commit (`_seq`) wins, so a delta overrides the
   * base it shadows; caller tie-breaks keep results deterministic.
   */
-object MorTable {
+object MorTable extends TableLayout {
+
+  val kind = "mor"
 
   private val SeqCol = "_seq"
   private val DelCol = "_deleted"
@@ -80,17 +82,6 @@ object MorTable {
     ()
   }
 
-  /** Fold all but the newest `keepLatest` active seq-ts lines into
-    * `_commits_archive` ([[CommitLogFile]]) — bounds the ACTIVE log a
-    * writer appends to; [[resolveAsOf]] resolves pre-boundary
-    * timestamps through the archive. Locked: the active-log rewrite
-    * would race writers' appends.
-    */
-  def archiveCommits(tablePath: String, keepLatest: Int): Seq[Long] =
-    FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
-      CommitLogFile.archive(tablePath, keepLatest)
-    }
-
   /** `TIMESTAMP AS OF` resolution — the Timeline.resolveAsOf contract
     * over the seq-time log: newest change seq at or before `tsMs`,
     * loud earlier (with a hint when the table predates timestamps).
@@ -98,27 +89,27 @@ object MorTable {
     * archival exists for.
     */
   def resolveAsOf(tablePath: String, tsMs: Long): Long = {
-    val timed =
-      CommitLogFile.fullLines(tablePath).flatMap(_.split(' ') match {
-        case Array(sq, t) if sq.forall(_.isDigit) && t.forall(_.isDigit) =>
-          Some((sq.toLong, t.toLong))
-        case _ => None // torn trailing line
-      })
+    val timed = seqTimes(tablePath)
     val head = changeHead(tablePath)
     // clamp to the COMMITTED head: a crash between the ts append and
     // the pointer swing leaves a line for a seq that never committed,
     // and resolution must never point past what readVersion can serve
-    val candidates = timed.collect {
-      case (sq, t) if t <= tsMs && sq <= head => sq
-    }
-    if (candidates.isEmpty) {
-      throw new IllegalArgumentException(
-        s"no commit at or before $tsMs at $tablePath" +
-          (if (timed.size < head + 1) " (commits predate timestamps — " +
-            "resolve those with VERSION AS OF)" else ""))
-    }
-    candidates.max
+    CommitLogFile.newestAtOrBefore(tablePath, tsMs,
+      timed.filter(_._1 <= head), math.max(0L, head + 1 - timed.size).toInt)
   }
+
+  /** (change seq, wall clock) per seq-time line, archived ones included. */
+  private def seqTimes(tablePath: String): Seq[(Long, Long)] =
+    CommitLogFile.fullLines(tablePath).flatMap(_.split(' ') match {
+      case Array(sq, t) if sq.forall(_.isDigit) && t.nonEmpty && t.forall(_.isDigit) =>
+        Some((sq.toLong, t.toLong))
+      case _ => None // torn trailing line
+    })
+
+  /** Seq 0 is the table's creation; every later seq a delta commit. */
+  def showCommits(spark: SparkSession, tablePath: String): DataFrame =
+    commitFrame(spark, seqTimes(tablePath).map { case (sq, t) =>
+      (sq, if (sq == 0L) "create" else "deltacommit", t) })
 
   /** (base, floor, kind) history lines, oldest first. */
   def baseHistory(tablePath: String): Seq[(Long, Long, String)] = {
@@ -324,7 +315,7 @@ object MorTable {
       // probe and reconciles AFTER the swing (an index ahead of the
       // commit would serve uncommitted rows; behind is merely stale).
       val cdcOn = CdcLog.enabled(tablePath)
-      val idx = boundCoveringIndexes(tablePath)
+      val idx = boundSecondaryIndexes(tablePath)
       val (flagged, images) =
         if (!cdcOn && idx.isEmpty) (flagged0, None)
         else {
@@ -382,43 +373,13 @@ object MorTable {
     (before.drop(SeqCol, DelCol), after.drop(SeqCol, DelCol))
   }
 
-  // ---- covering secondary index binding (see SecondaryIndex) --------
-
-  private def secIdxPath(tablePath: String): Path =
-    Paths.get(tablePath, "_secidx")
-
-  /** The bound covering indexes: (secondary cols, index path) per
-    * index — a table may bind several, one per query pattern.
-    * Engine-level (a table-dir file, not catalog state) so EVERY write
-    * path maintains them — programmatic upserts included.
-    */
-  def boundCoveringIndexes(tablePath: String): Seq[(Seq[String], String)] =
-    SecondaryIndex.readBindings(secIdxPath(tablePath))
-
-  def boundCoveringIndex(tablePath: String): Option[(Seq[String], String)] =
-    boundCoveringIndexes(tablePath).headOption
-
-  def bindCoveringIndex(tablePath: String, secCols: Seq[String],
-      indexPath: String): Unit =
-    SecondaryIndex.addBinding(secIdxPath(tablePath), secCols, indexPath)
-
-  /** Unbind every index (test/repair helper). */
-  def unbindCoveringIndex(tablePath: String): Unit = {
-    Files.deleteIfExists(secIdxPath(tablePath))
-    ()
-  }
-
-  /** Unbind one index by its artifact path (DROP INDEX). */
-  def unbindCoveringIndex(tablePath: String, indexPath: String): Unit =
-    SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
-
   /** Turn on row-level CDC (Hudi 0.13 `hoodie.table.cdc.enabled`):
     * commits AFTER the current head get before/after images, served by
     * [[changesCdc]]. The consumer seeds from a snapshot and
     * checkpoints [[changeHead]] — images for older commits don't exist
     * and their window is refused loudly.
     */
-  def enableCdc(tablePath: String): Unit =
+  override def enableCdc(tablePath: String): Unit =
     CdcLog.enable(tablePath, changeHead(tablePath))
 
   /** The row-level CDC feed for `(sinceSeq, head]`: `_op` ∈ {i,u,d},
@@ -427,7 +388,7 @@ object MorTable {
     * on a cursor below the cdc floor or a window with missing images —
     * see [[CdcLog.changes]].
     */
-  def changesCdc(spark: SparkSession, tablePath: String,
+  override def changesCdc(spark: SparkSession, tablePath: String,
       sinceSeq: Long): DataFrame =
     CdcLog.changes(spark, tablePath, sinceSeq, changeHead(tablePath))
 
@@ -668,7 +629,7 @@ object MorTable {
     * Returns the new base generation.
     */
   def cluster(spark: SparkSession, tablePath: String, sortCols: Seq[String],
-      targetFileRows: Long = 4000000L): Long =
+      targetFileRows: Long): Long =
     FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       require(sortCols.nonEmpty, "at least one clustering sort column")
       val (base, head, _) = fullState(tablePath).getOrElse(
@@ -719,73 +680,38 @@ object MorTable {
       writePointer(tablePath, next, head + 1, head + 1)
       // bound covering indexes are rebuilt from the replacement —
       // proportionate, the verb itself replaced the whole table
-      boundCoveringIndexes(tablePath).foreach { case (_, idxPath) =>
+      boundSecondaryIndexes(tablePath).foreach { case (_, idxPath) =>
         SecondaryIndex.rebuildMorCovering(incoming.sparkSession, tablePath,
           idxPath)
       }
       next
     }
 
-  /** Retention: delete base/log dirs of generations older than the
-    * current base. Never touches the live generation. `keepVersions >
-    * 0` additionally retains every base+log dir the newest
-    * `keepVersions` change seqs' snapshots resolve through (Hudi's
-    * KEEP_LATEST_COMMITS cleaner policy) — `VERSION AS OF` is then
-    * GUARANTEED inside the retention window, loud outside it.
+  // ---- savepoints (the pin file family is TableLayout's) -------------
+
+  /** A MOR savepoint pins the (base, head, floor) triple that resolves
+    * the current snapshot — [[clean]] then keeps the pinned base
+    * generation and the `(floor, head]` delta logs alive however
+    * aggressive retention gets.
     */
-  // ---- savepoints (Hudi's savepoint/restore on the MOR layout) -------
-
-  private val SavepointPrefix = "_savepoint_"
-
-  private def savepointPath(tablePath: String, name: String): Path = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"invalid savepoint name: $name")
-    Paths.get(tablePath, SavepointPrefix + name)
-  }
-
-  /** Pin the CURRENT snapshot state under `name`: the (base, head,
-    * floor) triple that resolves it — [[clean]] then keeps the pinned
-    * base generation and the `(floor, head]` delta logs alive however
-    * aggressive retention gets. The [[BucketTable.savepoint]] design
-    * applied to MOR's base-generation + delta-window state.
-    * O(metadata), no data copied.
-    */
-  def savepoint(tablePath: String, name: String): Unit = {
-    val p = savepointPath(tablePath, name)
-    require(!Files.exists(p), s"savepoint $name already exists")
+  protected def savepointBody(tablePath: String): String = {
     val (base, head, floor) = fullState(tablePath).getOrElse(
       throw new IllegalStateException(s"no MOR table at $tablePath"))
-    val tmp = Paths.get(tablePath, s"${SavepointPrefix}.tmp${System.nanoTime()}")
-    Files.writeString(tmp, s"$base $head $floor\n",
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  /** Savepoint names currently pinned. */
-  def savepoints(tablePath: String): Seq[String] = {
-    val s = Files.list(Paths.get(tablePath))
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(SavepointPrefix) &&
-        n.drop(SavepointPrefix.length).matches("[A-Za-z0-9_-]+"))
-      .map(_.drop(SavepointPrefix.length)).toSeq.sorted
-    finally s.close()
+    s"$base $head $floor\n"
   }
 
   private def savepointState(tablePath: String,
-      name: String): (Long, Long, Long) = {
-    val p = savepointPath(tablePath, name)
-    require(Files.exists(p), s"no savepoint $name at $tablePath")
-    Files.readString(p).trim.split(' ') match {
+      name: String): (Long, Long, Long) =
+    savepointLines(tablePath, name).mkString(" ").trim.split(' ') match {
       case Array(b, h, f) => (b.toLong, h.toLong, f.toLong)
       case _ => throw new IllegalStateException(
         s"malformed savepoint $name at $tablePath")
     }
-  }
 
-  /** Read the table AS OF a savepoint: the pinned base merged with the
-    * pinned delta window — no live-pointer involvement. Loud if any
-    * pinned dir vanished (only possible by external deletion —
-    * [[clean]] treats pinned dirs as live).
+  /** The pinned base merged with the pinned delta window — no
+    * live-pointer involvement. Loud if any pinned dir vanished (only
+    * possible by external deletion — [[clean]] treats pinned dirs as
+    * live).
     */
   def readSavepoint(spark: SparkSession, tablePath: String,
       name: String): DataFrame = {
@@ -805,32 +731,36 @@ object MorTable {
     mergedRange(spark, tablePath, base, floor, head).drop(SeqCol, DelCol)
   }
 
-  /** Roll the table BACK to a savepoint. NOT a metadata truncation:
-    * the change-seq head is globally monotonic by contract (a CDC
-    * cursor must never alias into renumbered commits), and truncating
-    * logs back to the pinned seq would hand the SAME seq numbers to
-    * different future content. The restore therefore RESTATES: the
-    * pinned snapshot becomes a new base generation via
-    * [[overwriteTable]] — one seq consumed, the cdc floor ratcheted
-    * (consumers re-sync loudly, as after any full restate), bound
-    * covering indexes rebuilt inside it. Commits after the savepoint
-    * become unreferenced debris for [[clean]]. Returns the new base
-    * generation.
+  /** NOT a metadata truncation: the change-seq head is globally
+    * monotonic by contract (a CDC cursor must never alias into
+    * renumbered commits), and truncating logs back to the pinned seq
+    * would hand the SAME seq numbers to different future content. The
+    * restore therefore RESTATES: the pinned snapshot becomes a new base
+    * generation via [[overwriteTable]] — one seq consumed, the cdc
+    * floor ratcheted (consumers re-sync loudly, as after any full
+    * restate), bound covering indexes rebuilt inside it. Commits after
+    * the savepoint become unreferenced debris for [[clean]].
     */
   def restoreSavepoint(spark: SparkSession, tablePath: String,
-      name: String): Long =
+      name: String): Unit = {
     overwriteTable(tablePath, readSavepoint(spark, tablePath, name)
       .localCheckpoint())
-
-  /** Unpin a savepoint; its dirs become reclaimable by [[clean]]
-    * unless still referenced by the live pointer or another savepoint.
-    */
-  def dropSavepoint(tablePath: String, name: String): Unit = {
-    Files.deleteIfExists(savepointPath(tablePath, name))
     ()
   }
 
-  def clean(tablePath: String, keepVersions: Int = 0): Seq[String] = {
+  def changeCounts(tablePath: String): (Long, Long, Long) = {
+    val (_, h, fl) = fullState(tablePath).getOrElse((0L, 0L, 0L))
+    (h - fl, h, fl)
+  }
+
+  /** Retention: delete base/log dirs of generations older than the
+    * current base. Never touches the live generation. `keepVersions >
+    * 0` additionally retains every base+log dir the newest
+    * `keepVersions` change seqs' snapshots resolve through (Hudi's
+    * KEEP_LATEST_COMMITS cleaner policy) — `VERSION AS OF` is then
+    * GUARANTEED inside the retention window, loud outside it.
+    */
+  def clean(tablePath: String, keepVersions: Int): Seq[String] = {
     val (base, _) = state(tablePath).getOrElse(return Seq.empty)
     val head = changeHead(tablePath)
     // resolve each retained seq the way readVersion does: the newest

@@ -45,7 +45,9 @@ import scala.jdk.CollectionConverters._
   * round-trip untouched and readers never depend on partition-value
   * type inference.
   */
-object PartitionedTable {
+object PartitionedTable extends TableLayout {
+
+  val kind = "partitioned"
 
   private val Shadow = "__p_"
 
@@ -178,40 +180,12 @@ object PartitionedTable {
     no
   }
 
-  /** `TIMESTAMP AS OF` resolution — the Timeline.resolveAsOf contract
-    * over the partitioned commit log: newest commit at or before
-    * `tsMs`, loud earlier (with a hint for pre-timestamp commits).
-    */
-  def resolveAsOf(tablePath: String, tsMs: Long): Long = {
-    val timed = CommitLogFile.fullLines(tablePath).flatMap(_.split(' ') match {
-      case Array(no, _, _, rest @ _*) if no.nonEmpty && no.forall(_.isDigit) =>
-        Some((no.toLong, rest.collectFirst {
-          case t if t.startsWith("ts=") && t.drop(3).forall(_.isDigit) =>
-            t.drop(3).toLong
-        }))
-      case Array(no, _, _*) if no.nonEmpty && no.forall(_.isDigit) =>
-        Some((no.toLong, Option.empty[Long]))
-      case _ => None
-    })
-    require(timed.nonEmpty, s"no commits at $tablePath")
-    val candidates = timed.collect { case (no, Some(t)) if t <= tsMs => no }
-    if (candidates.isEmpty) {
-      val untimed = timed.count(_._2.isEmpty)
-      throw new IllegalArgumentException(
-        s"no commit at or before $tsMs at $tablePath" +
-          (if (untimed > 0) s" ($untimed commits predate timestamps — " +
-            "resolve those with VERSION AS OF)" else ""))
-    }
-    candidates.max
-  }
+  def resolveAsOf(tablePath: String, tsMs: Long): Long =
+    CommitLogFile.resolveAsOf(tablePath, tsMs)
 
-  /** Fold all but the newest `keepLatest` active `_commits` lines into
-    * `_commits_archive` — same move as [[BucketTable.archiveCommits]].
-    */
-  def archiveCommits(tablePath: String, keepLatest: Int): Seq[Long] =
-    FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
-      CommitLogFile.archive(tablePath, keepLatest)
-    }
+  def showCommits(spark: SparkSession, tablePath: String): DataFrame =
+    commitFrame(spark, CommitLogFile.entries(tablePath).map {
+      case (no, kind, ts) => (no, kind, ts.getOrElse(-1L)) })
 
   /** The (manifest, delta log) AS OF `commit`: fold every logged diff
     * through. Loud on upgraded tables (log doesn't cover birth) and
@@ -765,13 +739,11 @@ object PartitionedTable {
     require(keyValues.length == p.keys.length,
       s"expected ${p.keys.length} key values (${p.keys.mkString(",")})")
     val schema = read(spark, tablePath).schema
-    val probe0 = p.partitionCols.zip(p.partitionTypes).zip(partitionValues)
-      .foldLeft(spark.range(1).toDF()) { case (df, ((c, t), v)) =>
-        df.withColumn(c, lit(v).cast(t))
-      }
-    val probe = p.keys.zip(keyValues).foldLeft(probe0) { case (df, (k, v)) =>
-      df.withColumn(k, lit(v).cast(schema(k).dataType))
-    }
+    val probe = Layout.literalRow(spark,
+      p.partitionCols.zip(p.partitionTypes.map(
+        org.apache.spark.sql.types.DataType.fromDDL)) ++
+        p.keys.map(k => k -> schema(k).dataType),
+      partitionValues ++ keyValues)
     val tagged = withShadow(probe, p)
     val r = tagged.select(p.dirCols.map(col): _*).head()
     val nParts = p.partitionCols.length
@@ -1140,7 +1112,7 @@ object PartitionedTable {
     * ratchet the cdc floor: a mixed workload re-syncs loudly, never
     * reads a feed with invisible gaps.
     */
-  def enableCdc(tablePath: String): Unit =
+  override def enableCdc(tablePath: String): Unit =
     CdcLog.enable(tablePath, changeHead(tablePath))
 
   /** The image feed for `(sinceSeq, head]` — op ∈ {i,u,d}, flat
@@ -1148,7 +1120,7 @@ object PartitionedTable {
     * (images live outside the delta log); destructive ops and CoW
     * writes floor every cursor.
     */
-  def changesCdc(spark: SparkSession, tablePath: String,
+  override def changesCdc(spark: SparkSession, tablePath: String,
       sinceSeq: Long): DataFrame =
     CdcLog.changes(spark, tablePath, sinceSeq,
       math.max(changeHead(tablePath), CdcLog.floor(tablePath)))
@@ -1518,7 +1490,7 @@ object PartitionedTable {
     * [[clean]] reclaims the superseded dirs.
     */
   def cluster(spark: SparkSession, tablePath: String, sortCols: Seq[String],
-      targetFileRows: Long = 4000000L): Long =
+      targetFileRows: Long): Long =
     clusterBy(spark, tablePath, sortCols.map(col), targetFileRows)
 
   /** [[cluster]] generalized to sort EXPRESSIONS — e.g. a Morton
@@ -1568,42 +1540,6 @@ object PartitionedTable {
     gen
   }
 
-  // ---- savepoints ----------------------------------------------------
-
-  private val SavepointPrefix = "_savepoint_"
-
-  // ---- bound secondary index (see SecondaryIndex.createPartitioned) --
-
-  private def secIdxPath(tablePath: String): Path =
-    Paths.get(tablePath, "_secidx")
-
-  /** The bound mapping indexes: (secondary cols, index path) per
-    * index — a table may bind several, one per query pattern.
-    * Engine-level (a table-dir file, not catalog state) so EVERY
-    * mutation primitive maintains them — programmatic writers
-    * included, which is what lets the SQL DML routes stay hook-free
-    * here.
-    */
-  def boundSecondaryIndexes(tablePath: String): Seq[(Seq[String], String)] =
-    SecondaryIndex.readBindings(secIdxPath(tablePath))
-
-  def boundSecondaryIndex(tablePath: String): Option[(Seq[String], String)] =
-    boundSecondaryIndexes(tablePath).headOption
-
-  def bindSecondaryIndex(tablePath: String, secCols: Seq[String],
-      indexPath: String): Unit =
-    SecondaryIndex.addBinding(secIdxPath(tablePath), secCols, indexPath)
-
-  /** Unbind every index (test/repair helper). */
-  def unbindSecondaryIndex(tablePath: String): Unit = {
-    Files.deleteIfExists(secIdxPath(tablePath))
-    ()
-  }
-
-  /** Unbind one index by its artifact path (DROP INDEX). */
-  def unbindSecondaryIndex(tablePath: String, indexPath: String): Unit =
-    SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
-
   // ---- bound GLOBAL record-level index (Hudi 0.14 RLI) ----------------
   //
   // The partitioned layout's identity is partition-scoped — a key
@@ -1634,6 +1570,10 @@ object PartitionedTable {
     Files.deleteIfExists(rliPath(tablePath))
     ()
   }
+
+  override def boundIndexArtifacts(tablePath: String): Seq[(String, String)] =
+    super.boundIndexArtifacts(tablePath) ++
+      boundRecordIndex(tablePath).toSeq.map(idx => ("record", idx))
 
   /** Every engine-bound index artifact as (mapping projection, path):
     * the secondary index stores (sec, identity) mappings, the RLI
@@ -1716,42 +1656,22 @@ object PartitionedTable {
         }
     }
 
-  private def savepointPath(tablePath: String, name: String): Path = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"invalid savepoint name: $name")
-    Paths.get(tablePath, SavepointPrefix + name)
-  }
+  // ---- savepoints (the pin file family is TableLayout's) -------------
 
-  /** Pin the CURRENT snapshot state under `name`: the manifest AND the
-    * pending delta log (a MOR snapshot is both), so [[clean]] keeps
-    * every referenced generation and delta commit alive. O(metadata).
+  /** A partitioned savepoint pins the manifest AND the pending delta
+    * log (a snapshot is both), so [[clean]] keeps every referenced
+    * generation and delta commit alive.
     */
-  def savepoint(tablePath: String, name: String): Unit = {
-    val p = savepointPath(tablePath, name)
-    require(!Files.exists(p), s"savepoint $name already exists")
+  protected def savepointBody(tablePath: String): String = {
     val m = manifest(tablePath)
     require(m.nonEmpty, s"no committed state to savepoint at $tablePath")
-    val body = (m.toSeq.sorted.map { case (d, g) => s"M $d $g" } ++
+    (m.toSeq.sorted.map { case (d, g) => s"M $d $g" } ++
       deltas(tablePath).sorted.map { case (d, g) => s"D $d $g" }).mkString("\n")
-    val tmp = Paths.get(tablePath, s"${SavepointPrefix}.tmp${System.nanoTime()}")
-    Files.writeString(tmp, body,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  def savepoints(tablePath: String): Seq[String] = {
-    val s = Files.list(Paths.get(tablePath))
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(SavepointPrefix) &&
-        n.drop(SavepointPrefix.length).matches("[A-Za-z0-9_-]+"))
-      .map(_.drop(SavepointPrefix.length)).toSeq.sorted
-    finally s.close()
   }
 
   private def savepointState(tablePath: String,
       name: String): (Map[String, Long], Seq[(String, Long)]) = {
-    val p = savepointPath(tablePath, name)
-    require(Files.exists(p), s"no savepoint $name at $tablePath")
-    val lines = Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq
+    val lines = savepointLines(tablePath, name)
     def parse(tag: String) = lines.filter(_.startsWith(tag + " ")).map { l =>
       val body = l.drop(2)
       val i = body.lastIndexOf(' ')
@@ -1792,9 +1712,7 @@ object PartitionedTable {
       (if (CdcLog.enabled(tablePath)) Seq(CdcLog.floor(tablePath))
        else Nil)).max + 1
 
-  /** Read the table AS OF a savepoint — the pinned base merged with
-    * the pinned delta log, live state untouched.
-    */
+  /** The pinned base merged with the pinned delta log. */
   def readSavepoint(spark: SparkSession, tablePath: String,
       name: String): DataFrame = {
     val p = props(tablePath)
@@ -1804,14 +1722,14 @@ object PartitionedTable {
     else mergeDeltas(base, deltaFrame(spark, tablePath, d, p), p)
   }
 
-  /** Roll the table BACK to a savepoint: atomically restore manifest
-    * and delta log under the table lock. Later generations and delta
-    * commits become debris for [[clean]].
+  /** Atomically restore manifest and delta log under the table lock.
+    * Later generations and delta commits become debris for [[clean]].
     */
-  def restoreSavepoint(tablePath: String, name: String): Unit = {
+  def restoreSavepoint(spark: SparkSession, tablePath: String,
+      name: String): Unit = {
     // a restore rewrites table state with no per-row diff to reconcile
-    // the index by (and no SparkSession here to rebuild it) — refuse
-    // loudly rather than leave the index diverged from restored state
+    // the index by — refuse loudly rather than leave the index diverged
+    // from restored state
     require(boundSecondaryIndexes(tablePath).isEmpty &&
         boundRecordIndex(tablePath).isEmpty,
       s"restore at $tablePath with a bound index would leave " +
@@ -1833,10 +1751,9 @@ object PartitionedTable {
     ()
   }
 
-  def dropSavepoint(tablePath: String, name: String): Unit = {
-    Files.deleteIfExists(savepointPath(tablePath, name))
-    ()
-  }
+  def changeCounts(tablePath: String): (Long, Long, Long) =
+    (deltas(tablePath).map(_._2).distinct.size.toLong, changeHead(tablePath),
+      compactedThrough(tablePath))
 
   // --------------------------------------------------------------------
 
@@ -1845,7 +1762,7 @@ object PartitionedTable {
     * commits referenced by a [[savepoint]] count as live. Returns
     * removed paths.
     */
-  def clean(tablePath: String, keepVersions: Int = 0): Seq[String] = {
+  def clean(tablePath: String, keepVersions: Int): Seq[String] = {
     def listDir(path: Path): Seq[Path] = {
       val s = Files.list(path)
       try s.iterator().asScala.toSeq finally s.close()

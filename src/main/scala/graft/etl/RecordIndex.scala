@@ -330,11 +330,10 @@ object RecordIndex {
       s"expected ${p.keys.length} key values (${p.keys.mkString(",")})")
     val nShards = shards(tablePath)
     val schema = BloomTable.read(spark, tablePath).schema
-    val probe = p.keys.zip(keyValues).foldLeft(spark.range(1).toDF()) {
-      case (df, (k, v)) => df.withColumn(k, lit(v).cast(schema(k).dataType))
-    }
+    val probe = Layout.literalRow(spark,
+      p.keys.map(k => k -> schema(k).dataType), keyValues)
     // the same hash expression the writers shard by — consistent by
-    // construction, and a one-row local job
+    // construction, evaluated on the driver
     val shard = probe
       .select(pmod(hash(p.keys.map(col): _*), lit(nShards)).as("__s"))
       .head().getInt(0)

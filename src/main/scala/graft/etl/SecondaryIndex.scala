@@ -552,7 +552,7 @@ object SecondaryIndex {
     BucketTable.create(entries, indexPath,
       keys = secCols ++ p.keys, precombine = Commit,
       numBuckets = numBuckets, bucketBy = secCols)
-    MorTable.bindCoveringIndex(primaryPath, secCols, indexPath)
+    MorTable.bindSecondaryIndex(primaryPath, secCols, indexPath)
     setCoveredHead(indexPath, h)
   }
 

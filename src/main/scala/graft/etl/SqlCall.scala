@@ -85,21 +85,12 @@ object SqlCall {
   /** Savepoints pin committed state — generation manifests (bucket /
     * partitioned), file manifests (bloom), base + delta windows (MOR),
     * snapshot versions (timeline); every layout supports the full
-    * lifecycle — dispatch by layout.
+    * lifecycle through [[TableLayout]].
     */
-  private def savepointOp[T](spark: SparkSession, table: String)(
-      bucket: String => T, partitioned: String => T,
-      bloom: String => T, mor: String => T, timeline: String => T): T =
-    Catalog.layoutOf(spark, table) match {
-      case Some(("bucket", p)) => bucket(p)
-      case Some(("partitioned", p)) => partitioned(p)
-      case Some(("bloom", p)) => bloom(p)
-      case Some(("mor", p)) => mor(p)
-      case Some(("timeline", p)) => timeline(p)
-      case other => throw new IllegalArgumentException(
-        s"$table: savepoints pin bucket | partitioned | bloom | mor | " +
-          "timeline state" + other.fold("")(kp => s"; layout: ${kp._1}"))
-    }
+  private def savepointLayout(spark: SparkSession,
+      table: String): (TableLayout, String) =
+    Layout.of(spark, table,
+      "savepoints pin bucket | partitioned | bloom | mor | timeline state")
 
   private def timelinePathOf(spark: SparkSession, table: String): String =
     Catalog.layoutOf(spark, table) match {
@@ -108,30 +99,6 @@ object SqlCall {
         s"$table is not a timeline-registered table" +
           other.fold("")(kp => s" (layout: ${kp._1})"))
     }
-
-  /** `show_commits` on the layouts that keep a `_commits` line log
-    * (bucket, bloom, partitioned, MOR), archived lines included: one
-    * (version, action, ts_ms) row per commit, oldest first. A line
-    * leads with its commit number — on MOR the change seq, whose wall
-    * clock is the second token; elsewhere a `ts=` token carries it
-    * (-1 on lines written before timestamps were), and bloom and
-    * partitioned lines name the commit's kind second.
-    */
-  private def commitLogHistory(kind: String,
-      path: String): Seq[(Long, String, Long)] =
-    CommitLogFile.fullLines(path).map { l =>
-      val tok = l.split(' ')
-      val no = tok(0).toLong
-      val ts = (if (kind == "mor") tok.lift(1)
-        else tok.find(_.startsWith("ts=")).map(_.drop(3)))
-        .filter(x => x.nonEmpty && x.forall(_.isDigit)).fold(-1L)(_.toLong)
-      val action = kind match {
-        case "mor" => if (no == 0L) "create" else "deltacommit"
-        case "bucket" => "commit"
-        case _ => tok.lift(1).getOrElse("commit")
-      }
-      (no, action, ts)
-    }.sortBy(_._1)
 
   private def toInt(x: Any, what: String): Int = x match {
     case i: Int => i
@@ -145,38 +112,18 @@ object SqlCall {
     import spark.implicits._
     (name, argv) match {
       case ("show_commits", Seq(t: String)) =>
-        Catalog.layoutOf(spark, t) match {
-          case Some(("timeline", p)) => Timeline.history(spark, p)
-          case Some((kind @ ("bucket" | "bloom" | "partitioned" | "mor"), p)) =>
-            commitLogHistory(kind, p).toDF("version", "action", "ts_ms")
-          case other => throw new IllegalArgumentException(
-            s"$t: show_commits needs a layout-bound table" +
-              other.fold("")(kp => s" (layout: ${kp._1})"))
-        }
+        val (layout, p) = Layout.of(spark, t, "show_commits needs a layout-bound table")
+        layout.showCommits(spark, p)
       case ("clean_commits", Seq(t: String, retain)) =>
-        Timeline.clean(timelinePathOf(spark, t),
+        Timeline.cleanVersions(timelinePathOf(spark, t),
           toInt(retain, "retain")).toDF("version")
       case ("archive_commits", Seq(t: String, keep)) =>
-        // timeline: fold instant FILES into a batch log; bucket/bloom:
-        // fold the `_commits` LINE log into `_commits_archive` — either
-        // way the active metadata a commit/pull reads stays bounded and
-        // old cursors resolve through the archive
-        Catalog.layoutOf(spark, t) match {
-          case Some(("bucket", p)) =>
-            BucketTable.archiveCommits(p, toInt(keep, "keep")).toDF("version")
-          case Some(("bloom", p)) =>
-            BloomTable.archiveCommits(p, toInt(keep, "keep")).toDF("version")
-          case Some(("partitioned", p)) =>
-            PartitionedTable.archiveCommits(p, toInt(keep, "keep"))
-              .toDF("version")
-          case Some(("mor", p)) =>
-            // fold the seq-ts log's old lines (TIMESTAMP AS OF resolves
-            // pre-boundary instants through the archive)
-            MorTable.archiveCommits(p, toInt(keep, "keep")).toDF("version")
-          case _ =>
-            Timeline.archive(timelinePathOf(spark, t),
-              toInt(keep, "keep")).toDF("version")
-        }
+        // timeline: fold instant FILES into a batch log; the others fold
+        // the `_commits` LINE log into `_commits_archive` — either way
+        // the active metadata a commit/pull reads stays bounded and old
+        // cursors resolve through the archive
+        val (layout, p) = Layout.of(spark, t, "archive_commits needs a layout-bound table")
+        layout.archiveCommits(p, toInt(keep, "keep")).toDF("version")
       case ("compact", Seq(t: String, n)) =>
         Seq(Timeline.compact(spark, timelinePathOf(spark, t),
           toInt(n, "num_files"))).toDF("version")
@@ -213,20 +160,9 @@ object SqlCall {
         // table is one file group, so clustering schedules AS a
         // compaction that writes the folded base sorted.
         val cols = sortCols.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val gen = Catalog.layoutOf(spark, t) match {
-          case Some(("partitioned", p)) =>
-            PartitionedTable.cluster(spark, p, cols)
-          case Some(("bucket", p)) => BucketTable.cluster(spark, p, cols)
-          case Some(("bloom", p)) => BloomTable.cluster(spark, p, cols)
-          case Some(("mor", p)) => MorTable.cluster(spark, p, cols)
-          case Some(("timeline", p)) =>
-            // sorted replacecommit — history untouched, new version out
-            Timeline.cluster(spark, p, cols)
-          case other => throw new IllegalArgumentException(
-            s"run_clustering('$t'): supported layouts are partitioned " +
-              "| bucket | bloom | mor | timeline" +
-              other.fold("")(kp => s"; layout: ${kp._1}"))
-        }
+        val (layout, p) = Layout.of(spark, t, "run_clustering supports " +
+          "partitioned | bucket | bloom | mor | timeline layouts")
+        val gen = layout.cluster(spark, p, cols)
         Seq(gen).toDF("generation")
       case ("run_bootstrap",
           Seq(t: String, src: String, dst: String, keys: String, pc: String)) =>
@@ -354,26 +290,10 @@ object SqlCall {
         // index-served route runs implicitly (SecondaryIndex
         // .ensureCurrent) — the operator's explicit repair verb after
         // a writer crash or a bypassing bulk load
-        val (kind, path) = Catalog.layoutOf(spark, t).getOrElse(
-          throw new IllegalArgumentException(
-            s"reconcile_index('$t'): not a layout-registered table"))
-        val artifacts: Seq[(String, String)] = kind match {
-          case "bucket" => BucketTable.boundSecondaryIndexes(path)
-            .map { case (_, idx) => ("secondary", idx) }
-          case "bloom" => BloomTable.boundSecondaryIndexes(path)
-            .map { case (_, idx) => ("secondary", idx) }
-          case "mor" => MorTable.boundCoveringIndexes(path)
-            .map { case (_, idx) => ("secondary", idx) }
-          case "partitioned" =>
-            PartitionedTable.boundSecondaryIndexes(path)
-              .map { case (_, idx) => ("secondary", idx) } ++
-              PartitionedTable.boundRecordIndex(path).toSeq
-                .map(idx => ("record", idx))
-          case other => throw new IllegalArgumentException(
-            s"reconcile_index('$t'): no index bindings on layout '$other'")
-        }
-        artifacts.map { case (tpe, idx) =>
-          SecondaryIndex.ensureCurrent(spark, kind, path, idx)
+        val (layout, path) = Layout.of(spark, t,
+          "reconcile_index needs a layout-registered table")
+        layout.boundIndexArtifacts(path).map { case (tpe, idx) =>
+          SecondaryIndex.ensureCurrent(spark, layout.kind, path, idx)
           (tpe, idx, SecondaryIndex.coveredHead(idx))
         }.toDF("index_type", "artifact", "covered_head")
       case ("incremental_read", Seq(t: String, from)) =>
@@ -427,70 +347,35 @@ object SqlCall {
         // windows. Served in the WRITE schema, like Hudi's cdc log.
         require(mode == "cdc",
           s"table_changes('$t', ..., '$mode'): the only mode is 'cdc'")
-        val sinceSeq2 = toLongArg(since, "since")
-        Catalog.layoutOf(spark, t) match {
-          case Some(("mor", p)) => MorTable.changesCdc(spark, p, sinceSeq2)
-          case Some(("bucket", p)) => BucketTable.changesCdc(spark, p, sinceSeq2)
-          case Some(("bloom", p)) => BloomTable.changesCdc(spark, p, sinceSeq2)
-          case Some(("partitioned", p)) =>
-            PartitionedTable.changesCdc(spark, p, sinceSeq2)
-          case other => throw new IllegalArgumentException(
-            s"table_changes('$t', ..., 'cdc'): image-logging is " +
-              "implemented for mor | bucket | bloom | partitioned " +
-              "layouts" + other.fold("")(kp => s"; layout: ${kp._1}"))
-        }
+        val (layout, p) = Layout.of(spark, t,
+          "table_changes(..., 'cdc') needs a layout-bound table")
+        layout.changesCdc(spark, p, toLongArg(since, "since"))
       case ("enable_cdc", Seq(t: String)) =>
-        Catalog.layoutOf(spark, t) match {
-          case Some(("mor", p)) => MorTable.enableCdc(p)
-          case Some(("bucket", p)) => BucketTable.enableCdc(p)
-          case Some(("bloom", p)) => BloomTable.enableCdc(p)
-          case Some(("partitioned", p)) => PartitionedTable.enableCdc(p)
-          case other => throw new IllegalArgumentException(
-            s"enable_cdc('$t'): image-logging is implemented for " +
-              "mor | bucket | bloom | partitioned layouts" +
-              other.fold("")(kp => s"; layout: ${kp._1}"))
-        }
+        val (layout, p) = Layout.of(spark, t,
+          "enable_cdc needs a layout-bound table")
+        layout.enableCdc(p)
         Seq(t).toDF("cdc_enabled")
       case ("create_savepoint", Seq(t: String, sp: String)) =>
-        savepointOp(spark, t)(
-          p => BucketTable.savepoint(p, sp),
-          p => PartitionedTable.savepoint(p, sp),
-          p => BloomTable.savepoint(p, sp),
-          p => MorTable.savepoint(p, sp),
-          p => Timeline.savepoint(p, sp))
+        val (layout, p) = savepointLayout(spark, t)
+        layout.savepoint(p, sp)
         Seq(sp).toDF("savepoint")
       case ("show_savepoints", Seq(t: String)) =>
-        savepointOp(spark, t)(
-          BucketTable.savepoints(_), PartitionedTable.savepoints(_),
-          BloomTable.savepoints(_), MorTable.savepoints(_),
-          Timeline.savepoints(_))
-          .toDF("savepoint")
+        val (layout, p) = savepointLayout(spark, t)
+        layout.savepoints(p).toDF("savepoint")
       case ("rollback_to_savepoint", Seq(t: String, sp: String)) =>
-        savepointOp(spark, t)(
-          p => BucketTable.restoreSavepoint(p, sp),
-          p => PartitionedTable.restoreSavepoint(p, sp),
-          p => BloomTable.restoreSavepoint(spark, p, sp),
-          p => { MorTable.restoreSavepoint(spark, p, sp); () },
-          p => { Timeline.restoreSavepoint(spark, p, sp); () })
+        val (layout, p) = savepointLayout(spark, t)
+        layout.restoreSavepoint(spark, p, sp)
         Seq(sp).toDF("savepoint")
       case ("delete_savepoint", Seq(t: String, sp: String)) =>
-        savepointOp(spark, t)(
-          p => BucketTable.dropSavepoint(p, sp),
-          p => PartitionedTable.dropSavepoint(p, sp),
-          p => BloomTable.dropSavepoint(p, sp),
-          p => MorTable.dropSavepoint(p, sp),
-          p => Timeline.dropSavepoint(p, sp))
+        val (layout, p) = savepointLayout(spark, t)
+        layout.dropSavepoint(p, sp)
         Seq(sp).toDF("savepoint")
       case ("read_savepoint", Seq(t: String, sp: String)) =>
         // time-travel read of a pinned state WITHOUT restoring it —
         // the live table is untouched (pin-aware cleaning keeps the
         // pinned generations readable)
-        Catalog.alignToDeclared(spark, t, savepointOp(spark, t)(
-          p => BucketTable.readSavepoint(spark, p, sp),
-          p => PartitionedTable.readSavepoint(spark, p, sp),
-          p => BloomTable.readSavepoint(spark, p, sp),
-          p => MorTable.readSavepoint(spark, p, sp),
-          p => Timeline.readSavepoint(spark, p, sp)))
+        val (layout, p) = savepointLayout(spark, t)
+        Catalog.alignToDeclared(spark, t, layout.readSavepoint(spark, p, sp))
       case (other, args) => throw new IllegalArgumentException(
         s"unknown procedure '$other'/${args.length} (supported: " +
           "show_commits, clean_commits, archive_commits, compact, " +
@@ -578,18 +463,8 @@ object SqlCall {
   private def cleanTable(spark: SparkSession, t: String,
       keep: Int): DataFrame = {
     import spark.implicits._
-    val removed = Catalog.layoutOf(spark, t) match {
-      case Some(("bucket", p)) => BucketTable.clean(p, keep)
-      case Some(("bloom", p)) => BloomTable.clean(p, keep)
-      case Some(("partitioned", p)) => PartitionedTable.clean(p, keep)
-      case Some(("mor", p)) => MorTable.clean(p, keep)
-      case Some(("timeline", _)) => throw new IllegalArgumentException(
-        s"clean('$t'): timeline tables clean by version — use " +
-          "clean_commits(table, retain)")
-      case other => throw new IllegalArgumentException(
-        s"$t is not layout-registered" +
-          other.fold("")(kp => s" (layout: ${kp._1})"))
-    }
+    val (layout, p) = Layout.of(spark, t, "clean needs a layout-registered table")
+    val removed = layout.clean(p, keep)
     removed.toDF("file")
   }
 
@@ -607,9 +482,18 @@ object SqlCall {
     */
   private def fsView(spark: SparkSession, t: String): DataFrame = {
     import spark.implicits._
-    val (kind, path) = Catalog.layoutOf(spark, t).getOrElse(
-      throw new IllegalArgumentException(
-        s"show_fsview('$t'): not a layout-registered table"))
+    // live = what the TABLE's current state references. A `mor_ro`
+    // entry is a read view of a MOR table: its health is the table's,
+    // and its live set the SNAPSHOT's (base + live logs) — the RO
+    // binding narrows the read, not the table, and classifying live
+    // delta logs as debris would invite an operator to reclaim
+    // unconsumed data
+    val (layout, path, snapshot) = Catalog.layoutOf(spark, t) match {
+      case Some(("mor_ro", p)) => (MorTable, p, MorTable.readSnapshot(spark, p))
+      case _ =>
+        val (l, p) = Layout.of(spark, t, "show_fsview needs a layout-registered table")
+        (l, p, Catalog.readPhysical(spark, t))
+    }
     def walk(dir: String): Seq[(String, Long)] = {
       val p = java.nio.file.Paths.get(dir)
       if (!java.nio.file.Files.exists(p)) Seq.empty
@@ -635,59 +519,23 @@ object SqlCall {
     def norm(f: String): String =
       f.replaceFirst("^file:/+", "/")
     val all = walk(path)
-    // live = what the TABLE's current state references. For MOR that is
-    // the SNAPSHOT's file set (base + live logs) even under a `mor_ro`
-    // registration: the RO binding narrows the read, not the table —
-    // classifying live delta logs as debris would invite an operator to
-    // reclaim unconsumed data
-    val live = (Catalog.layoutOf(spark, t) match {
-      case Some(("mor" | "mor_ro", p)) =>
-        MorTable.readSnapshot(spark, p).inputFiles
-      case _ => Catalog.readPhysical(spark, t).inputFiles
-    }).map(norm).toSet
-    // savepoint-pinned state: readable via read_savepoint, kept by clean
-    val pinned: Set[String] = (kind match {
-      case "bucket" => BucketTable.savepoints(path)
-        .flatMap(sp => BucketTable.readSavepoint(spark, path, sp).inputFiles)
-      case "partitioned" => PartitionedTable.savepoints(path)
-        .flatMap(sp => PartitionedTable.readSavepoint(spark, path, sp).inputFiles)
-      case "bloom" => BloomTable.savepoints(path)
-        .flatMap(sp => BloomTable.readSavepoint(spark, path, sp).inputFiles)
-      case "mor" | "mor_ro" => MorTable.savepoints(path)
-        .flatMap(sp => MorTable.readSavepoint(spark, path, sp).inputFiles)
-      case _ => Seq.empty
-    }).map(norm).toSet -- live
-    val history: Set[String] = kind match {
-      case "timeline" => all.map(_._1).toSet -- live
-      case _ => Set.empty
-    }
+    val live = snapshot.inputFiles.map(norm).toSet
+    // savepoint-pinned state: readable via read_savepoint, kept by
+    // clean; on a layout that keeps history every non-live file is
+    // history instead
+    val (pinned, history) =
+      if (layout.keepsHistory) (Set.empty[String], all.map(_._1).toSet -- live)
+      else (layout.savepoints(path).flatMap(sp =>
+        layout.readSavepoint(spark, path, sp).inputFiles).map(norm).toSet -- live,
+        Set.empty[String])
     val debris = all.filterNot(f =>
       live(f._1) || pinned(f._1) || history(f._1))
     def bytes(fs: Seq[(String, Long)]) = fs.map(_._2).sum
     val liveFs = all.filter(f => live(f._1))
     val pinnedFs = all.filter(f => pinned(f._1))
     val historyFs = all.filter(f => history(f._1))
-    val (pending, head, floor) = kind match {
-      case "mor" | "mor_ro" =>
-        val (_, h, fl) = MorTable.fullState(path).getOrElse((0L, 0L, 0L))
-        (h - fl, h, fl)
-      case "partitioned" =>
-        (PartitionedTable.deltas(path).map(_._2).distinct.size.toLong,
-          PartitionedTable.changeHead(path),
-          PartitionedTable.compactedThrough(path))
-      case "bucket" => (0L, BucketTable.latestCommit(path), 0L)
-      case "bloom" => (0L, BloomTable.latestCommit(path), 0L)
-      case "timeline" => (0L, Timeline.versions(path).maxOption.getOrElse(0L), 0L)
-      case _ => (0L, 0L, 0L)
-    }
-    val savepoints = kind match {
-      case "bucket" => BucketTable.savepoints(path).size.toLong
-      case "partitioned" => PartitionedTable.savepoints(path).size.toLong
-      case "bloom" => BloomTable.savepoints(path).size.toLong
-      case "mor" | "mor_ro" => MorTable.savepoints(path).size.toLong
-      case "timeline" => Timeline.savepoints(path).size.toLong
-      case _ => 0L
-    }
+    val (pending, head, floor) = layout.changeCounts(path)
+    val savepoints = layout.savepoints(path).size.toLong
     val indexes = Catalog.indexesOf(spark, t).size.toLong
     Seq(
       "live_files" -> liveFs.size.toLong,
@@ -723,8 +571,7 @@ object SqlCall {
       keyArgs: Seq[Any]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val (kind, path) = Catalog.layoutOf(spark, t).getOrElse(
-      throw new IllegalArgumentException(s"$t is not a layout-registered table"))
+    val (layout, path) = Layout.of(spark, t, "purge_key needs a layout-registered table")
     val keys = Catalog.upsertConfigFull(spark, t)._1
     require(keyArgs.length == keys.length,
       s"purge_key('$t', ...) needs ${keys.length} key values " +
@@ -732,12 +579,15 @@ object SqlCall {
     // LAZY: the timeline branch must not read the table before its
     // purge has repaired an interrupted swap (the read would fail on
     // the absent live dir the repair is about to restore)
-    lazy val schema = Catalog.readTable(spark, t).schema
-    lazy val keysDf = keys.zip(keyArgs).foldLeft(spark.range(1).toDF()) {
-      case (df, (k, v)) => df.withColumn(k, lit(v).cast(schema(k).dataType))
-    }.select(keys.map(col): _*)
-    kind match {
-      case "bloom" =>
+    lazy val keysDf = {
+      val schema = Catalog.readTable(spark, t).schema
+      Layout.literalRow(spark, keys.map(k => k -> schema(k).dataType), keyArgs)
+    }
+    // a bound secondary index reconciles inside each layout's delete
+    def sec = layout.boundSecondaryIndexes(path).map { case (_, idxPath) =>
+      "secondary_index" -> s"reconciled=$idxPath" }
+    (layout match {
+      case BloomTable =>
         // the engine-bound secondary index (when any) retires the key's
         // mappings inside the delete commit
         val rewritten = BloomTable.deleteFrom(spark, path, keysDf)
@@ -748,26 +598,16 @@ object SqlCall {
               staleKeys = Some(keysDf))
             Seq("record_index" -> s"shards_refreshed=${shards.size}")
           }
-        val sec = BloomTable.boundSecondaryIndexes(path).map {
-          case (_, idxPath) =>
-            "secondary_index" -> s"reconciled=$idxPath"
-        }
-        (Seq("table" -> s"files_rewritten=${rewritten.size}") ++ rli ++ sec)
-          .toDF("artifact", "detail")
-      case "bucket" =>
+        Seq("table" -> s"files_rewritten=${rewritten.size}") ++ rli ++ sec
+      case BucketTable =>
         // the engine binding captures the row's mappings in its
         // pre-probe and retires them inside the delete commit — no
         // SQL-layer resolve-then-tombstone dance (and no crash window
         // between the two: a torn maintenance pass is caught by the
         // covered-head serve check)
         val buckets = BucketTable.deleteFrom(spark, path, keysDf)
-        val sec = BucketTable.boundSecondaryIndexes(path).map {
-          case (_, idxPath) =>
-            "secondary_index" -> s"reconciled=$idxPath"
-        }
-        (Seq("table" -> s"buckets_rewritten=${buckets.size}") ++ sec)
-          .toDF("artifact", "detail")
-      case "partitioned" =>
+        Seq("table" -> s"buckets_rewritten=${buckets.size}") ++ sec
+      case PartitionedTable =>
         // the key arrives WITHOUT its partition value (that is the
         // point of a global purge) — the record-level index resolves
         // key → identity from one probed bucket, and the delete
@@ -788,14 +628,9 @@ object SqlCall {
               "full_scan")
         }
         val rewritten = PartitionedTable.deleteFrom(spark, path, ids)
-        val sec = PartitionedTable.boundSecondaryIndexes(path).map {
-          case (_, idxPath) =>
-            "secondary_index" -> s"reconciled=$idxPath"
-        }
-        (Seq("table" -> s"slices_rewritten=${rewritten.size}",
-          "resolution" -> how) ++ sec)
-          .toDF("artifact", "detail")
-      case "mor" =>
+        Seq("table" -> s"slices_rewritten=${rewritten.size}",
+          "resolution" -> how) ++ sec
+      case MorTable =>
         // MOR purge = a tombstone append carrying the victim's own
         // precombine (equal precombine → the later commit wins the
         // snapshot merge, Hudi's _hoodie_is_deleted contract). The
@@ -810,13 +645,8 @@ object SqlCall {
           .localCheckpoint()
         val n = victims.count()
         if (n > 0) MorTable.deleteFrom(path, victims)
-        val sec = MorTable.boundCoveringIndexes(path).map {
-          case (_, idxPath) =>
-            "secondary_index" -> s"reconciled=$idxPath"
-        }
-        (Seq("table" -> s"tombstoned=$n") ++ sec)
-          .toDF("artifact", "detail")
-      case "timeline" =>
+        Seq("table" -> s"tombstoned=$n") ++ sec
+      case Timeline =>
         // the VERSIONED layout's purge is a HISTORY rewrite: the key
         // leaves every retained snapshot (Timeline.purgeKey — versions
         // it never reached stay byte-identical), because a versioned
@@ -826,10 +656,6 @@ object SqlCall {
         Seq("table" -> ("versions_rewritten=" + rewritten.size +
           (if (rewritten.isEmpty) ""
            else s" (${rewritten.mkString(",")})")))
-          .toDF("artifact", "detail")
-      case other => throw new IllegalArgumentException(
-        s"purge_key('$t'): supported layouts are bucket | bloom | " +
-          s"partitioned | mor | timeline, got '$other'")
-    }
+    }).toDF("artifact", "detail")
   }
 }

@@ -256,19 +256,8 @@ object SqlIndex {
                 s"${cs.mkString(",")}:$ip" }.mkString(";"))
             // every layout carries the engine-level binding that drives
             // write-path maintenance — unbind this artifact with the drop
-            Catalog.layoutOf(spark, target).foreach {
-              case ("mor", path) =>
-                MorTable.unbindCoveringIndex(path, artifact)
-              case ("partitioned", path) =>
-                PartitionedTable.unbindSecondaryIndex(path, artifact)
-              case ("bucket", path) =>
-                BucketTable.unbindSecondaryIndex(path, artifact)
-              case ("bloom", path) =>
-                BloomTable.unbindSecondaryIndex(path, artifact)
-              case ("timeline", path) =>
-                Timeline.unbindSecondaryIndex(path, artifact)
-              case _ => ()
-            }
+            Layout.find(spark, target).foreach { case (layout, path) =>
+              layout.unbindSecondaryIndex(path, artifact) }
             // the reconcile-serialization scope and covered-head state
             // go with the index
             FsUtil.deleteRecursively(

@@ -66,31 +66,17 @@ object SqlRead {
             //                 consumer's snapshot)
             // every TIMESTAMP resolves by the same contract: newest
             // commit at or before the instant, loud earlier
-            val travel: Option[(Long => Long, Long => DataFrame)] =
-              kind match {
-                case "timeline" => Some((Timeline.resolveAsOf(path, _),
-                  Timeline.readVersion(spark, path, _)))
-                case "bucket" => Some((BucketTable.resolveAsOf(path, _),
-                  BucketTable.readVersion(spark, path, _)))
-                case "bloom" => Some((BloomTable.resolveAsOf(path, _),
-                  BloomTable.readVersion(spark, path, _)))
-                case "partitioned" =>
-                  Some((PartitionedTable.resolveAsOf(path, _),
-                    PartitionedTable.readVersion(spark, path, _)))
-                case "mor" => Some((MorTable.resolveAsOf(path, _),
-                  MorTable.readVersion(spark, path, _)))
-                case _ => None
-              }
-            travel match {
-              case Some((resolve, readVersion)) =>
+            Layout.named(kind) match {
+              case Some(layout) =>
                 val version = (tt.version, tt.timestamp) match {
                   case (Some(v), _) => v.toLong
-                  case (None, Some(ts)) => resolve(epochMs(ts))
+                  case (None, Some(ts)) => layout.resolveAsOf(path, epochMs(ts))
                   case (None, None) => throw new IllegalArgumentException(
                     s"time travel over $name needs VERSION AS OF or " +
                       "TIMESTAMP AS OF")
                 }
-                Catalog.alignToDeclared(spark, name, readVersion(version))
+                Catalog.alignToDeclared(spark, name,
+                  layout.readVersion(spark, path, version))
                   .queryExecution.analyzed
               case None => throw new IllegalArgumentException(
                 s"$name is not a versioned-layout table — time travel " +

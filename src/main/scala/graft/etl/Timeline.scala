@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   * window, mirroring Hudi's retained-commits model (a long-running
   * reader of a cleaned version fails exactly as it does in Hudi).
   */
-object Timeline {
+object Timeline extends TableLayout {
+
+  val kind = "timeline"
 
   private def pointer(tablePath: String): Path = Paths.get(tablePath, "_latest")
   private def timelineDir(tablePath: String): Path = Paths.get(tablePath, "_timeline")
@@ -133,15 +135,9 @@ object Timeline {
   def resolveAsOf(tablePath: String, tsMs: Long): Long = {
     val all = instants(tablePath)
     require(all.nonEmpty, s"no commits at $tablePath")
-    val candidates = all.filter(i => i.ts_ms >= 0 && i.ts_ms <= tsMs)
-    if (candidates.isEmpty) {
-      val untimed = all.count(_.ts_ms < 0)
-      throw new IllegalArgumentException(
-        s"no commit at or before $tsMs at $tablePath" +
-          (if (untimed > 0) s" ($untimed instants predate timestamps — " +
-            "resolve those with VERSION AS OF)" else ""))
-    }
-    candidates.map(_.version).max
+    CommitLogFile.newestAtOrBefore(tablePath, tsMs,
+      all.collect { case i if i.ts_ms >= 0 => (i.version, i.ts_ms) },
+      all.count(_.ts_ms < 0))
   }
 
   /** Archive the active timeline down to its newest `keepLatest`
@@ -152,14 +148,15 @@ object Timeline {
     * object store, the unbounded file listing is the thing this
     * exists to prevent). History is preserved, not dropped —
     * [[history]] reads both. Archival is metadata-only: snapshot data
-    * dirs are untouched (retention of DATA is [[clean]]'s job, exactly
-    * as archival and cleaning are independent services in Hudi).
+    * dirs are untouched (retention of DATA is [[cleanVersions]]'s job,
+    * exactly as archival and cleaning are independent services in
+    * Hudi).
     * Returns the versions archived.
     */
-  def archive(tablePath: String, keepLatest: Int): Seq[Long] =
+  override def archiveCommits(tablePath: String, keepLatest: Int): Seq[Long] =
     // table lock shared with [[purgeKey]] (which rewrites the instant
-    // lines archive batches up) and [[clean]] — same serialization
-    // discipline as every destructive metadata service here
+    // lines archive batches up) and [[cleanVersions]] — same
+    // serialization discipline as every destructive metadata service
     FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {
       archiveLocked(tablePath, keepLatest)
     }
@@ -194,13 +191,18 @@ object Timeline {
 
   /** The full commit history — archived batch files plus the active
     * instants, deduped by version (archived copy wins, covering a
-    * crash between [[archive]]'s batch write and file retirement),
+    * crash between [[archiveCommits]]'s batch write and file
+    * retirement),
     * ascending. Timeline metadata is bounded by commit count, not
     * data size, so materializing it driver-side is the right shape —
     * this is a catalog read, not a table scan.
     */
   def history(spark: SparkSession, tablePath: String): DataFrame =
     spark.createDataFrame(instants(tablePath))
+
+  /** A timeline's `show_commits` carries its instants whole. */
+  def showCommits(spark: SparkSession, tablePath: String): DataFrame =
+    history(spark, tablePath)
 
   /** The deduped, ascending instant list behind [[history]] —
     * driver-side (timeline metadata is bounded by commit count, not
@@ -279,7 +281,8 @@ object Timeline {
     * instant's recorded row count refreshes so `history()` stays
     * truthful. O(hit versions) rewrite — inherent to a history purge.
     * The whole sweep holds the table [[FsLock]], shared with
-    * [[clean]]/[[archive]] and the commit swing: a concurrent clean
+    * [[cleanVersions]]/[[archiveCommits]] and the commit swing: a
+    * concurrent clean
     * deleting `v=N` dirs mid-swap would otherwise strand staging dirs
     * or fail the atomic moves — lock-enforced, not a comment contract
     * (purges are rare; blocking writers for the sweep is the right
@@ -397,7 +400,7 @@ object Timeline {
     * crashed OCC attempts' staged dirs, age-gated like
     * [[BloomTable.clean]]'s sweep ([[FsUtil.staleDirs]]).
     */
-  def clean(tablePath: String, retain: Int): Seq[Long] =
+  def cleanVersions(tablePath: String, retain: Int): Seq[Long] =
     // table lock shared with [[purgeKey]]'s sweep and the commit
     // swing: deleting a version dir out from under a purge's atomic
     // renames (or vice versa) must be impossible by construction
@@ -438,7 +441,7 @@ object Timeline {
     * layouts' `cluster` restates do. Returns the new version.
     */
   def cluster(spark: SparkSession, tablePath: String, sortCols: Seq[String],
-      targetFileRows: Long = 4000000L): Long = {
+      targetFileRows: Long): Long = {
     require(sortCols.nonEmpty, "at least one clustering sort column")
     import org.apache.spark.sql.functions.col
     // Locked read-to-commit, same rationale as [[compact]]: the
@@ -472,10 +475,11 @@ object Timeline {
     * the catch-up entry point a downstream pipeline calls with the
     * last version it saw. The checkpoint is validated against the FULL
     * commit history ([[instants]] — archived batch logs folded in), so
-    * a consumer whose checkpoint predates an [[archive]] boundary
+    * a consumer whose checkpoint predates an [[archiveCommits]]
+    * boundary
     * still resolves; archival bounds the ACTIVE timeline listing, it
     * never loses a consumer. What DOES bound how far back a consumer
-    * may lag is data retention: if [[clean]] has removed the
+    * may lag is data retention: if [[cleanVersions]] has removed the
     * checkpointed snapshot, the pull fails loudly naming the repair
     * (full refresh) instead of silently diffing against the wrong
     * base — exactly Hudi's incremental-read contract, where archival
@@ -603,53 +607,24 @@ object Timeline {
   // ---- savepoints (pin a version against retention) -------------------
   //
   // Hudi's savepoint IS a timeline-level pin — on the snapshot layout
-  // it reduces to "this version is not [[clean]]able": O(1) metadata,
-  // no data copied. read_savepoint = the pinned version's snapshot;
+  // it reduces to "[[cleanVersions]] keeps this version": O(1)
+  // metadata, no data copied. read_savepoint = the pinned version's
+  // snapshot;
   // restore = that snapshot as the NEWEST commit (history stays
   // append-only — same shape as [[restore]] by version number, which
   // the pin makes safe to use long after retention would have swept
   // the version away). [[purgeKey]] deliberately rewrites pinned
   // versions too: right-to-be-forgotten trumps pins, as everywhere.
 
-  private val SavepointPrefix = "_savepoint_"
+  /** A timeline savepoint pins the CURRENT version number. */
+  protected def savepointBody(tablePath: String): String =
+    latestVersion(tablePath).getOrElse(
+      throw new IllegalStateException(s"no commits at $tablePath")).toString
 
-  private def savepointPath(tablePath: String, name: String): Path = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"invalid savepoint name: $name")
-    Paths.get(tablePath, SavepointPrefix + name)
-  }
+  private def savepointVersion(tablePath: String, name: String): Long =
+    savepointLines(tablePath, name).mkString.trim.toLong
 
-  /** Pin the CURRENT version under `name`. */
-  def savepoint(tablePath: String, name: String): Unit = {
-    val p = savepointPath(tablePath, name)
-    require(!Files.exists(p), s"savepoint $name already exists")
-    val v = latestVersion(tablePath).getOrElse(
-      throw new IllegalStateException(s"no commits at $tablePath"))
-    val tmp = Paths.get(tablePath, s"${SavepointPrefix}.tmp${System.nanoTime()}")
-    Files.writeString(tmp, v.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  /** Savepoint names currently pinned. */
-  def savepoints(tablePath: String): Seq[String] = {
-    val dir = Paths.get(tablePath)
-    if (!Files.exists(dir)) return Seq.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(SavepointPrefix) &&
-        n.drop(SavepointPrefix.length).matches("[A-Za-z0-9_-]+"))
-      .map(_.drop(SavepointPrefix.length)).toSeq.sorted
-    finally s.close()
-  }
-
-  private def savepointVersion(tablePath: String, name: String): Long = {
-    val p = savepointPath(tablePath, name)
-    require(Files.exists(p), s"no savepoint $name at $tablePath")
-    Files.readString(p).trim.toLong
-  }
-
-  /** Versions pinned by any savepoint — [[clean]] keeps them. */
+  /** Versions pinned by any savepoint — [[cleanVersions]] keeps them. */
   private def pinnedVersions(tablePath: String): Set[Long] =
     savepoints(tablePath).map(savepointVersion(tablePath, _)).toSet
 
@@ -662,16 +637,24 @@ object Timeline {
     * commit (append-only history, like [[restore]]).
     */
   def restoreSavepoint(spark: SparkSession, tablePath: String,
-      name: String): Long =
+      name: String): Unit = {
     restore(spark, tablePath, savepointVersion(tablePath, name))
-
-  /** Unpin; the version becomes cleanable unless it is the latest or
-    * another savepoint still pins it.
-    */
-  def dropSavepoint(tablePath: String, name: String): Unit = {
-    Files.deleteIfExists(savepointPath(tablePath, name))
     ()
   }
+
+  /** Every non-current version is history that time travel reads. */
+  override def keepsHistory: Boolean = true
+
+  def changeCounts(tablePath: String): (Long, Long, Long) =
+    (0L, versions(tablePath).maxOption.getOrElse(0L), 0L)
+
+  /** Timeline tables clean by version ([[cleanVersions]]); file-level
+    * `clean` is refused.
+    */
+  def clean(tablePath: String, keepVersions: Int): Seq[String] =
+    throw new IllegalArgumentException(
+      s"clean('$tablePath'): timeline tables clean by version — use " +
+        "clean_commits(table, retain)")
 
   // ---- covering secondary index binding (see SecondaryIndex) ---------
   //
@@ -685,30 +668,6 @@ object Timeline {
   // equality SELECT is served ENTIRELY from the index's probed bucket.
   // Time-travel reads (VERSION/TIMESTAMP AS OF, savepoint reads) never
   // consult the index — it answers for the head only.
-
-  private def secIdxPath(tablePath: String): Path =
-    Paths.get(tablePath, "_secidx")
-
-  /** The bound covering indexes: (secondary cols, index path) per
-    * index. Engine-level (a table-dir file, not catalog state) so
-    * programmatic writers maintain them too.
-    */
-  def boundSecondaryIndexes(tablePath: String): Seq[(Seq[String], String)] =
-    SecondaryIndex.readBindings(secIdxPath(tablePath))
-
-  def bindSecondaryIndex(tablePath: String, secCols: Seq[String],
-      indexPath: String): Unit =
-    SecondaryIndex.addBinding(secIdxPath(tablePath), secCols, indexPath)
-
-  /** Unbind every index (test/repair helper). */
-  def unbindSecondaryIndex(tablePath: String): Unit = {
-    Files.deleteIfExists(secIdxPath(tablePath))
-    ()
-  }
-
-  /** Unbind one index by its artifact path (DROP INDEX). */
-  def unbindSecondaryIndex(tablePath: String, indexPath: String): Unit =
-    SecondaryIndex.removeBinding(secIdxPath(tablePath), indexPath)
 
   /** Reconcile every bound index to the current head — called after
     * each commit/pointer swing. A crash before this is caught by the

@@ -1144,7 +1144,7 @@ object PipelineQueries {
       numBuckets = 16)
     graft.etl.BucketTable.savepoint(path, "pre-load")
     graft.etl.BucketTable.upsertInto(spark, path, ev.filter(col("ts_us") > SplitUs))
-    graft.etl.BucketTable.restoreSavepoint(path, "pre-load")
+    graft.etl.BucketTable.restoreSavepoint(spark, path, "pre-load")
     graft.etl.BucketTable.clean(path)
     graft.etl.BucketTable.read(spark, path)
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -1293,7 +1293,7 @@ object PipelineQueries {
     graft.etl.Timeline.savepoint(path, "pre-load")
     graft.etl.Timeline.upsertInto(spark, path, ev.filter(col("ts_us") > SplitUs),
       keys = Seq("user_id"), precombine = "ts_us", tieBreak = Seq("event_id"))
-    graft.etl.Timeline.clean(path, retain = 1) // pin-aware: v0 survives
+    graft.etl.Timeline.cleanVersions(path, retain = 1) // pin-aware: v0 survives
     val asOf = graft.etl.Timeline.readSavepoint(spark, path, "pre-load")
       .select(cols.map(col): _*)
     require(asOf.exceptAll(pinned).isEmpty && pinned.exceptAll(asOf).isEmpty,
@@ -1426,7 +1426,7 @@ object PipelineQueries {
   /** `p_bucket_incr_archived`: the bucket incremental pull ACROSS a
     * `_commits` archival boundary — `CALL archive_commits` folds all
     * but the newest line into `_commits_archive`
-    * ([[graft.etl.CommitLogFile]], the Timeline.archive move on a line
+    * ([[graft.etl.CommitLogFile]], the Timeline.archiveCommits move on a line
     * log), then a consumer checkpointed BEFORE the boundary pulls: the
     * old cursor resolves through the archive, the feed equals the
     * unarchived pull, and the active log every commit reads stays
@@ -3283,7 +3283,7 @@ object PipelineQueries {
   def timelineArchive(spark: SparkSession, sfDir: String): DataFrame = {
     val path = timelineScenario(spark, sfDir)
     graft.etl.Timeline.restore(spark, path, 1L)
-    graft.etl.Timeline.archive(path, keepLatest = 2)
+    graft.etl.Timeline.archiveCommits(path, keepLatest = 2)
     graft.etl.Timeline.history(spark, path)
       .select(col("version"), col("action"), col("n_rows"), col("archived"))
   }
@@ -3544,7 +3544,7 @@ object PipelineQueries {
     */
   def timelineIncrArchived(spark: SparkSession, sfDir: String): DataFrame = {
     val path = timelineScenario(spark, sfDir)
-    graft.etl.Timeline.archive(path, keepLatest = 1)
+    graft.etl.Timeline.archiveCommits(path, keepLatest = 1)
     graft.etl.Timeline.incrementalPull(spark, path,
       keys = Seq("user_id"), sinceVersion = 0L)
   }

@@ -40,7 +40,7 @@ class BucketTableSpec extends SparkSpec {
 
     // restore = roll the live manifest back; post-savepoint generations
     // become debris that clean reclaims
-    BucketTable.restoreSavepoint(dir, "before-load")
+    BucketTable.restoreSavepoint(spark, dir, "before-load")
     assert(contents(dir) == Seq(("a", 1L, 1.0), ("b", 1L, 2.0)))
     assert(BucketTable.clean(dir).nonEmpty)
     assert(contents(dir) == Seq(("a", 1L, 1.0), ("b", 1L, 2.0)))
@@ -59,7 +59,7 @@ class BucketTableSpec extends SparkSpec {
     BucketTable.savepoint(dir, "s1")
     BucketTable.upsertInto(spark, dir, rows(("a", 2L, 9.0))) // gen 1
     BucketTable.savepoint(dir, "s2")
-    BucketTable.restoreSavepoint(dir, "s1")
+    BucketTable.restoreSavepoint(spark, dir, "s1")
     // next write must allocate past s2's pinned gen 1, not collide
     BucketTable.upsertInto(spark, dir, rows(("b", 1L, 2.0)))
     assert(BucketTable.readSavepoint(spark, dir, "s2")
@@ -375,7 +375,7 @@ class BucketTableSpec extends SparkSpec {
     BucketTable.savepoint(dir, "pre")
     BucketTable.rescale(spark, dir, factor = 4)
     assert(BucketTable.props(dir).numBuckets == 16)
-    BucketTable.restoreSavepoint(dir, "pre")
+    BucketTable.restoreSavepoint(spark, dir, "pre")
     // routing reverted with the manifest: a lookup must hash mod 4
     // again, or live keys would resolve to absent bucket ids
     assert(BucketTable.props(dir).numBuckets == 4)

@@ -150,7 +150,7 @@ class CdcLogSpec extends SparkSpec {
       Seq((2L, "i", "b", None, Some(2.0))))
     BucketTable.savepoint(dir, "sp")
     BucketTable.upsertInto(spark, dir, rows(("c", 1L, 3.0)))    // commit 3
-    BucketTable.restoreSavepoint(dir, "sp")              // commit 4: destructive
+    BucketTable.restoreSavepoint(spark, dir, "sp")              // commit 4: destructive
     val err = intercept[IllegalArgumentException] {
       BucketTable.changesCdc(spark, dir, 3L)
     }

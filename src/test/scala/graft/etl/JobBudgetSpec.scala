@@ -136,7 +136,7 @@ class JobBudgetSpec extends SparkSpec {
     check("bucket", Seq(
       ("merge", 5, () => merge(t)),
       ("delete", 5, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
-      ("key select", 2, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
+      ("key select", 1, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
       ("in-list select", 1, () => assert(
         select(s"SELECT $Cols FROM $t WHERE event_id IN (5, 750, 850)") == 3))))
   }
@@ -147,7 +147,7 @@ class JobBudgetSpec extends SparkSpec {
       s"CREATE INDEX budget_sec ON $t USING SECONDARY (user_id)").collect()
     check("bloom", Seq(
       ("merge", 10, () => merge(t)),
-      ("delete", 11, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
+      ("delete", 10, () => SqlMerge.exec(spark, s"DELETE FROM $t WHERE user_id = 13")),
       ("key select", 1, () => assert(select(s"SELECT $Cols FROM $t WHERE event_id = 750") == 1)),
       ("secondary select", 3, () => assert(
         select(s"SELECT $Cols FROM $t WHERE user_id = 12") > 0))))

@@ -296,7 +296,7 @@ class PartitionedTableSpec extends SparkSpec {
 
     // roll back to s1, then write again: the new commits must not
     // reuse (and destroy) generations/delta seqs s2 still pins
-    PartitionedTable.restoreSavepoint(dir, "s1")
+    PartitionedTable.restoreSavepoint(spark, dir, "s1")
     PartitionedTable.upsertInto(spark, dir, rows(("d1", "c", 1L, 3.0)))
     PartitionedTable.upsertDelta(spark, dir, rows(("d1", "e", 1L, 5.0)))
     assert(PartitionedTable.readSavepoint(spark, dir, "s2")

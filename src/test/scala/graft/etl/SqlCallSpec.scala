@@ -55,7 +55,7 @@ class SqlCallSpec extends SparkSpec {
     val w = SqlCall.exec(spark, "CALL incremental_read('call_incr_tl', 0, 2)")
       .as[(Long, String)].collect().toMap
     assert(w == Map(2L -> "insert", 3L -> "insert")) // v0={1}, v2={1,2,3}
-    Timeline.archive(p, keepLatest = 1)
+    Timeline.archiveCommits(p, keepLatest = 1)
     val catchUp = SqlCall.exec(spark, "CALL incremental_read('call_incr_tl', 1)")
       .as[(Long, String)].collect().toMap
     assert(catchUp == Map(3L -> "insert", 4L -> "insert"))
@@ -276,7 +276,7 @@ class SqlCallSpec extends SparkSpec {
       keys = Seq("k"), precombine = "pc")                    // v2: +8
     // archive v0's instant so the purge exercises the archived-line
     // count refresh too
-    Timeline.archive(p, keepLatest = 2)
+    Timeline.archiveCommits(p, keepLatest = 2)
     Catalog.registerTimelineTable(spark, "sqlcall_pk4", p,
       keys = Seq("k"), precombine = "pc")
     val report = SqlCall.exec(spark, "CALL purge_key('sqlcall_pk4', 3)")

@@ -296,7 +296,7 @@ class SqlIndexSpec extends SparkSpec {
       "SELECT k FROM sql_idx_mor WHERE etype = 'click'").count() == 8L)
     // drop unbinds the engine-level maintenance hook with the artifact
     SqlIndex.exec(spark, "DROP INDEX m1 ON sql_idx_mor")
-    assert(MorTable.boundCoveringIndex(path).isEmpty)
+    assert(MorTable.boundSecondaryIndexes(path).isEmpty)
     assert(!Files.exists(Paths.get(s"${path}_idx_m1")))
   }
 
@@ -364,13 +364,13 @@ class SqlIndexSpec extends SparkSpec {
     // reconcile by) — DROP INDEX first is the documented path
     PartitionedTable.savepoint(path, "s1")
     intercept[IllegalArgumentException] {
-      PartitionedTable.restoreSavepoint(path, "s1")
+      PartitionedTable.restoreSavepoint(spark, path, "s1")
     }
     // drop unbinds the engine-level maintenance hook with the artifact
     SqlIndex.exec(spark, "DROP INDEX p1 ON sql_idx_part")
-    assert(PartitionedTable.boundSecondaryIndex(path).isEmpty)
+    assert(PartitionedTable.boundSecondaryIndexes(path).isEmpty)
     assert(!Files.exists(Paths.get(s"${path}_idx_p1")))
-    PartitionedTable.restoreSavepoint(path, "s1") // unbound: allowed
+    PartitionedTable.restoreSavepoint(spark, path, "s1") // unbound: allowed
   }
 
   test("bloom secondary index: index-composed serving, every write path maintains") {
@@ -418,7 +418,7 @@ class SqlIndexSpec extends SparkSpec {
     assert(served("SELECT k FROM sql_idx_bl WHERE etype = 'click'").isEmpty)
     // drop unbinds the engine-level maintenance hook with the artifact
     SqlIndex.exec(spark, "DROP INDEX b1 ON sql_idx_bl")
-    assert(BloomTable.boundSecondaryIndex(path).isEmpty)
+    assert(BloomTable.boundSecondaryIndexes(path).isEmpty)
     assert(!Files.exists(Paths.get(s"${path}_idx_b1")))
   }
 
@@ -574,10 +574,10 @@ class SqlIndexSpec extends SparkSpec {
     SqlIndex.exec(spark,
       "CREATE INDEX tm1 ON sql_idx_tornmor USING SECONDARY (etype)")
     val mIdx = s"${mp}_idx_tm1"
-    MorTable.unbindCoveringIndex(mp)
+    MorTable.unbindSecondaryIndex(mp)
     MorTable.upsertInto(mp,
       rows((99L, 1L, "click", 9.9), (2L, 5L, "view", 2.5)))
-    MorTable.bindCoveringIndex(mp, Seq("etype"), mIdx)
+    MorTable.bindSecondaryIndex(mp, Seq("etype"), mIdx)
     assert(SecondaryIndex.coveredHead(mIdx) < MorTable.changeHead(mp))
     assert(SqlRead.select(spark,
       "SELECT k FROM sql_idx_tornmor WHERE etype = 'click'")

@@ -31,7 +31,7 @@ class TimelineSpec extends SparkSpec {
     (1 to 4).foreach(i =>
       Timeline.upsertInto(spark, dir, rows(("a", i.toLong, i.toDouble)), Seq("k"), "pc"))
     assert(Timeline.versions(dir) == Seq(0L, 1L, 2L, 3L))
-    val dropped = Timeline.clean(dir, retain = 2)
+    val dropped = Timeline.cleanVersions(dir, retain = 2)
     assert(dropped == Seq(0L, 1L))
     assert(Timeline.versions(dir) == Seq(2L, 3L))
     assert(Timeline.read(spark, dir).count() == 1)
@@ -141,7 +141,7 @@ class TimelineSpec extends SparkSpec {
     // the queue wait
     age(Files.createDirectories(java.nio.file.Paths.get(dir, "_staged-5")),
       FsLock.LockExpiryMs + 1000L)
-    assert(Timeline.clean(dir, retain = 2).isEmpty)
+    assert(Timeline.cleanVersions(dir, retain = 2).isEmpty)
     assert(staged() == Seq("_staged-2", "_staged-4", "_staged-5"))
     // the SQL verb runs the same sweep
     crash("_staged-3")
@@ -192,7 +192,7 @@ class TimelineSpec extends SparkSpec {
     }
     assert(timelineFiles.count(_.endsWith(".commit")) == 6)
 
-    val archived = Timeline.archive(dir, keepLatest = 2)
+    val archived = Timeline.archiveCommits(dir, keepLatest = 2)
     assert(archived == Seq(0L, 1L, 2L, 3L))
     // active timeline bounded: 2 instant files + ONE archived batch
     assert(timelineFiles == Seq("4.commit", "5.commit", "archived-0-3.log"))
@@ -207,8 +207,8 @@ class TimelineSpec extends SparkSpec {
     assert(h.map(_._4) == Seq(true, true, true, true, false, false))
 
     // archival is idempotent at the same retention and monotone below it
-    assert(Timeline.archive(dir, keepLatest = 2).isEmpty)
-    assert(Timeline.archive(dir, keepLatest = 1) == Seq(4L))
+    assert(Timeline.archiveCommits(dir, keepLatest = 2).isEmpty)
+    assert(Timeline.archiveCommits(dir, keepLatest = 1) == Seq(4L))
     val h2 = Timeline.history(spark, dir)
       .select("version", "action", "n_rows", "archived")
       .as[(Long, String, Long, Boolean)].collect().toSeq.sortBy(_._1)
@@ -225,7 +225,7 @@ class TimelineSpec extends SparkSpec {
     assert(beforeArchive == Seq(("b", "update"), ("c", "insert")))
     // fold v0/v1 instants into the archived log — the v0 checkpoint
     // must still resolve through the full history
-    assert(Timeline.archive(dir, keepLatest = 1) == Seq(0L, 1L))
+    assert(Timeline.archiveCommits(dir, keepLatest = 1) == Seq(0L, 1L))
     val afterArchive = Timeline.incrementalPull(spark, dir, Seq("k"), 0L)
       .select("k", "change_type").as[(String, String)].collect().toSeq.sortBy(_._1)
     assert(afterArchive == beforeArchive,
@@ -237,7 +237,7 @@ class TimelineSpec extends SparkSpec {
     assert(e1.getMessage.contains("never committed"))
     // cleaning the checkpointed snapshot makes the pull fail loudly,
     // naming the repair — never a silent wrong-base diff
-    Timeline.clean(dir, retain = 1)
+    Timeline.cleanVersions(dir, retain = 1)
     val e2 = intercept[IllegalArgumentException] {
       Timeline.incrementalPull(spark, dir, Seq("k"), 0L)
     }
@@ -275,8 +275,8 @@ class TimelineSpec extends SparkSpec {
     th.join(60000)
     assert(purged == Seq(0L, 1L, 2L))
     // interleave the other destructive services — all on the same lock
-    assert(Timeline.clean(dir, retain = 2) == Seq(0L))
-    assert(Timeline.archive(dir, keepLatest = 1) == Seq(0L, 1L))
+    assert(Timeline.cleanVersions(dir, retain = 2) == Seq(0L))
+    assert(Timeline.archiveCommits(dir, keepLatest = 1) == Seq(0L, 1L))
     // every retained version is u7-free, u8 intact
     Timeline.versions(dir).foreach { v =>
       val rows = Timeline.readVersion(spark, dir, v)
