@@ -1008,9 +1008,9 @@ object BloomTable extends TableLayout {
     writeManifest(tablePath, newManifest.toSeq, commit, "write",
       CdcLog.Action.Changes { () =>
         CdcLog.diff(
-          existing.join(broadcast(batchKeys), p.keys, "leftsemi"),
+          existing.join(batchKeys, p.keys, "leftsemi"),
           readFiles(spark, tablePath, written)
-            .join(broadcast(batchKeys), p.keys, "leftsemi"), p.keys)
+            .join(batchKeys, p.keys, "leftsemi"), p.keys)
       })
     writeIndex(tablePath,
       nextIndexRows(spark, tablePath, snap, touched, written, p),

@@ -754,7 +754,7 @@ object BucketTable extends TableLayout {
     // dedup shuffle and no extra materialization job
     val wanted = bound.headOption.map(_ => tagged.select(p.keys.map(col): _*))
     val pre = wanted.map(w => MaintProf.timed("bucket.pre")(
-      existing.drop(BucketCol).join(broadcast(w), p.keys, "leftsemi")
+      existing.drop(BucketCol).join(w, p.keys, "leftsemi")
         .localCheckpoint()))
     val merged = HudiLike.upsert(existing, tagged,
       p.keys, p.precombine, p.tieBreak)
@@ -772,10 +772,10 @@ object BucketTable extends TableLayout {
       CdcLog.Action.Changes { () =>
         val bk = tagged.select(p.keys.map(col): _*) // precombined: unique
         val before = existing.drop(BucketCol)
-          .join(broadcast(bk), p.keys, "leftsemi")
+          .join(bk, p.keys, "leftsemi")
         CdcLog.diff(before,
           readGenBuckets(spark, tablePath, gen, written, before)
-            .join(broadcast(bk), p.keys, "leftsemi"), p.keys)
+            .join(bk, p.keys, "leftsemi"), p.keys)
       }))
     // the post side re-reads what readers now see for the batch's
     // keys — the written files, never a replay of the merge algebra
@@ -783,7 +783,7 @@ object BucketTable extends TableLayout {
     maintainBound(spark, tablePath, bound, pre,
       MaintProf.timed("bucket.post")(
         readGenBuckets(spark, tablePath, gen, written, tagged.drop(BucketCol))
-          .join(broadcast(wanted.get), p.keys, "leftsemi")), p, c)
+          .join(wanted.get, p.keys, "leftsemi")), p, c)
     written
   }
 
@@ -869,10 +869,10 @@ object BucketTable extends TableLayout {
         // batch-key restriction: same argument as [[upsertInto]]'s diff
         val bk = tagged.select(p.keys.map(col): _*) // precombined: unique
         val before = existing.drop(BucketCol)
-          .join(broadcast(bk), p.keys, "leftsemi")
+          .join(bk, p.keys, "leftsemi")
         Some(CdcLog.diff(before,
           readGenBuckets(spark, tablePath, gen, written, before)
-            .join(broadcast(bk), p.keys, "leftsemi"), p.keys)
+            .join(bk, p.keys, "leftsemi"), p.keys)
           .localCheckpoint())
       } else None
     val outcome = FsLock.withTableLock(tablePath, FsLock.QueueWaitMs) {

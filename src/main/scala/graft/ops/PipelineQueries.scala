@@ -2089,7 +2089,7 @@ object PipelineQueries {
     * keyed precombine upsert, as in Hudi's Spark SQL surface.
     */
   def sqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(morScratch, "sm").toString
+    val loc = tableLocation("sm")
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("value"), col("ts_us"))
@@ -2098,7 +2098,7 @@ object PipelineQueries {
       s"""CREATE TABLE graft_merge_target (
          |  user_id BIGINT, event_id BIGINT, event_type STRING,
          |  value DOUBLE, ts_us BIGINT)
-         |USING PARQUET LOCATION '$base/t'
+         |USING PARQUET LOCATION '$loc'
          |TBLPROPERTIES (
          |  'graft.table.type' = 'cow',
          |  'graft.table.primaryKey' = 'user_id',
@@ -2117,13 +2117,21 @@ object PipelineQueries {
     spark.table("graft_merge_target")
   }
 
+  /** A fresh table location under the scratch dir, created before the
+    * CREATE TABLE that names it: Spark probes the location for a
+    * streaming sink's metadata dir and logs a missing one with a trace.
+    */
+  private def tableLocation(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectory(
+      java.nio.file.Files.createTempDirectory(morScratch, prefix).resolve("t"))
+
   /** Shared scaffold for the SQL UPDATE/DELETE queries: a catalog
     * table named `name` holding the latest-per-user state as of
     * [[SplitUs]].
     */
   private def sqlDmlTable(spark: SparkSession, sfDir: String,
       name: String): Unit = {
-    val base = java.nio.file.Files.createTempDirectory(morScratch, "dml").toString
+    val loc = tableLocation("dml")
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("value"), col("ts_us"))
@@ -2132,7 +2140,7 @@ object PipelineQueries {
       s"""CREATE TABLE $name (
          |  user_id BIGINT, event_id BIGINT, event_type STRING,
          |  value DOUBLE, ts_us BIGINT)
-         |USING PARQUET LOCATION '$base/t'
+         |USING PARQUET LOCATION '$loc'
          |TBLPROPERTIES (
          |  'graft.table.primaryKey' = 'user_id',
          |  'graft.table.preCombineField' = 'ts_us',

@@ -110,8 +110,12 @@ object DivComparisonPushdown extends Rule[LogicalPlan] {
   * any future rules/strategies) via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or the
   * `spark.sql.extensions=graft.plans.GraftExtensions` config.
+  * Constructing one also installs the engine's JVM-wide defaults
+  * ([[GraftExtensions.installEngineDefaults]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  GraftExtensions.installEngineDefaults()
+
   private def binary(name: String)(build: (Expression, Expression) => Expression)
       : Seq[Expression] => Expression = { exprs =>
     if (exprs.length != 2) {
@@ -149,4 +153,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.L2SquaredDistance].getName, "l2sq_dist"),
       binary("l2sq_dist")(graft.functions.L2SquaredDistance(_, _))))
   }
+}
+
+object GraftExtensions {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Capacity of Spark's JVM-wide cache of compiled generated classes.
+    *
+    * Spark reads the capacity once, when `CodeGenerator` initializes,
+    * and defaults it to 100. Every engine statement runs through
+    * whole-stage codegen, and the engine's statement mix needs more: a
+    * whole lake run (MERGE, DELETE and reads on all five layouts, index
+    * upkeep, table services, `Pipeline.run`) compiles 312 entries, the
+    * LLM-data operator queries 110. At 100 the LRU evicts classes a round
+    * compiled a moment before, and the round compiles them again: 225
+    * compiles (1.8 s) in a timed lake round, against 18 (0.2 s) at 1,000;
+    * those 18 differ in a predicate or commit-number literal. 1,000 is
+    * over twice the largest set measured. The 312 entries hold 636
+    * classes of 1.9 KB mean bytecode, 1.2 MB.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** Install the engine's defaults as `spark.*` system properties, which
+    * the next `new SparkConf()` (the one `getOrCreate()` builds) reads.
+    * A value already set as a system property is left alone, and a
+    * builder's `.config(...)` still wins over it. A session that installs
+    * the extensions through the `spark.sql.extensions` conf, or that
+    * starts on an existing SparkContext, keeps Spark's own 100: its
+    * SparkConf was read before this ran.
+    */
+  def installEngineDefaults(): Unit =
+    System.getProperties.putIfAbsent(CodegenCacheKey, CodegenCacheEntries.toString)
 }

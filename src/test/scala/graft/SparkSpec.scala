@@ -14,6 +14,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    // the engine's JVM-wide defaults (the codegen cache size), without
+    // the extensions' rules
+    graft.plans.GraftExtensions.installEngineDefaults()
     val s = SparkSession.builder()
       .master("local[8]")
       .appName("graft-test")
